@@ -10,7 +10,7 @@ Re-implements the reference's derived extractors (SURVEY.md §2.5):
   (`/root/reference/lib/HTML/LinkExtor.pm:59-133`)
 
 These are plain per-document Python functions; the Spark operators run
-them inside `mapInPandas` so tokenize+extract is one fused stage with
+them inside `mapInArrow` so tokenize+extract is one fused stage with
 no shuffle (each turn is independent).
 """
 

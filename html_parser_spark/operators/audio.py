@@ -282,7 +282,8 @@ def parse_mp3_meta(payload: bytes) -> tuple:
             size = ((payload[6] & 0x7F) << 21) \
                 | ((payload[7] & 0x7F) << 14) \
                 | ((payload[8] & 0x7F) << 7) | (payload[9] & 0x7F)
-            pos = 10 + size
+            # flags bit 4: a 10-byte footer follows the tag body
+            pos = 10 + size + (10 if payload[5] & 0x10 else 0)
         frames = 0
         kbps = sr = ch = None
         while pos + 4 <= n:

@@ -14,6 +14,19 @@ no pandas detour (5x cheaper for map/list columns, measured).  No
 shuffle, no skew sensitivity (a hot conv_id just means more rows, all
 independent); ``plans.pipeline`` adds salted repartitioning only when
 a downstream stage needs conv-level grouping or balanced output files.
+
+Each Python task also pays a fixed cost before its first row, beside
+transfer and interpretation. pyspark 4.1's worker calls
+``importlib.invalidate_caches()`` on every task, and on Python 3.11
+that makes each ``zipimporter`` on the worker's path re-read the
+directory of ``pyspark.zip`` (1,328 entries): ~0.13 s on an idle
+4-vCPU host, ~0.28 s median under a ``local[4]`` load. The cost is per
+task, not per row, so ``extract_text`` sizes its map by input bytes
+(``_size_tasks``): Spark's file-split rule, ``max(defaultParallelism,
+ceil(input bytes / spark.sql.files.maxPartitionBytes))``, applied by
+coalesce to an input that is already partitioned. A cached input of
+16 small partitions on 4 cores then runs as one wave of 4 tasks; a
+large scan keeps about its own split count.
 """
 
 from __future__ import annotations
@@ -134,6 +147,40 @@ EXTRACT_SCHEMA = T.StructType([
 ])
 
 
+def _size_tasks(df: DataFrame) -> DataFrame:
+    """Coalesce ``df`` to Spark's file-split task count,
+    ``max(defaultParallelism, ceil(input bytes / maxPartitionBytes))``,
+    where the input bytes are the summed size estimates of the
+    optimized plan's leaves (scans, cached relations). Every Python
+    task pays a fixed worker cost before its first row (module
+    docstring), so an over-partitioned input should run as one wave
+    of tasks. Coalesce never adds partitions or a shuffle. Streaming
+    input, a leaf with no size estimate (``spark.sql.defaultSizeInBytes``,
+    Long.MaxValue unless set) and an input the caller already
+    coalesced (the optimizer would merge that coalesce into ours)
+    pass through.
+    """
+    if df.isStreaming:
+        return df
+    plan = df._jdf.queryExecution().optimizedPlan()
+    node = plan
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    if node.nodeName() == "Repartition" and not node.shuffle():
+        return df
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    size = 0
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next().stats().sizeInBytes()
+        if leaf >= conf.defaultSizeInBytes():
+            return df
+        size += leaf
+    return df.coalesce(max(spark.sparkContext.defaultParallelism,
+                           -(-size // conf.filesMaxPartitionBytes())))
+
+
 def extract_text(df: DataFrame, cfg: ParserConfig = EXTRACT_CONFIG,
                  textify: dict[str, str] = DEFAULT_TEXTIFY,
                  text_col: str = "text") -> DataFrame:
@@ -171,7 +218,7 @@ def extract_text(df: DataFrame, cfg: ParserConfig = EXTRACT_CONFIG,
     cols = [F.col("conv_id").cast("string"),
             F.col("turn_idx").cast("int"),
             F.col(text_col)]
-    return df.select(*cols).mapInArrow(run, EXTRACT_SCHEMA)
+    return _size_tasks(df.select(*cols)).mapInArrow(run, EXTRACT_SCHEMA)
 
 
 EVENTS_SCHEMA = T.StructType([

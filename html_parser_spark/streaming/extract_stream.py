@@ -7,7 +7,7 @@ SURVEY.md §2.6 there are no watermark semantics to port. What a
 production corpus DOES need is continuous ingestion: new transcript
 turns land (Iceberg snapshot / Kafka topic / file drop) and flow
 through the identical extraction operators. Because every operator
-is per-turn (stateless across rows), the batch `mapInPandas` stage
+is per-turn (stateless across rows), the batch `mapInArrow` stage
 is reused VERBATIM — `extract_text(stream_df)` — and the stream
 stays shuffle-free end-to-end (append mode, no stateful operator).
 

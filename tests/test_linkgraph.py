@@ -5,6 +5,7 @@ fixed-point design exists for), and the URL-hardening posture."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from html_parser_spark.operators.linkgraph import (
@@ -130,6 +131,15 @@ def test_trustrank_seed_propagation_exact(spark):
            for r in pagerank(_edges(spark, pairs), iters=2,
                              seed_hosts=("SEED.COM",)).collect()}
     assert got == _py_pagerank(pairs, 2, seeds={"seed.com"})
+
+
+def test_trustrank_empty_seed_set_raises(spark):
+    """An empty seed list would give every host zero trust; it must
+    fail loudly, like the iters guard, not return an all-zero
+    table."""
+    for seeds in ((), []):
+        with pytest.raises(ValueError, match="seed_hosts"):
+            pagerank(_edges(spark, GRAPH), iters=2, seed_hosts=seeds)
 
 
 def test_trustrank_dangling_mass_returns_to_seeds_only(spark):

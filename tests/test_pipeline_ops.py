@@ -1961,6 +1961,22 @@ def test_mp3_walk_degrades():
         parse_mp3_meta(good)[:4]
 
 
+def test_mp3_id3v2_footer_flag_skipped():
+    """An ID3v2.4 tag with the footer flag (0x10) set carries a
+    10-byte footer after its body; the walk must skip it and find
+    the frame behind it."""
+    from html_parser_spark.operators.audio import parse_mp3_meta
+
+    body = b"TIT2"
+    size = bytes([0, 0, 0, len(body)])              # syncsafe
+    header = b"ID3\x04\x00\x10" + size
+    footer = b"3DI\x04\x00\x10" + size
+    flen = 144 * 128 * 1000 // 44100                # 128 kbps, 44.1 kHz
+    frame = bytes([0xFF, 0xFB, 9 << 4, 0]) + b"\x00" * (flen - 4)
+    assert parse_mp3_meta(header + body + footer + frame) == \
+        (44100, 2, 1, 128, 1152 * 1000 // 44100)
+
+
 def test_subtitle_cues(spark, docs):
     """WebVTT + SRT cue extraction on Spark: fixture timing/text in
     closed form, and real-world wrinkles on hand-built samples —

@@ -38,6 +38,38 @@ def test_extract_plan_is_shuffle_free_and_pruned(spark, tmp_path):
     assert "conv_id" in struct and "text" in struct
 
 
+def test_extract_tasks_sized_by_input_bytes(spark, tmp_path):
+    """Every Python task pays a fixed worker cost, so an input with
+    more partitions than cores is coalesced to one wave of
+    defaultParallelism tasks (a narrow Coalesce, no Exchange added);
+    an input with fewer partitions keeps its count, and so does one
+    the caller coalesced itself."""
+    from html_parser_spark.operators.extract import extract_text
+
+    par = spark.sparkContext.defaultParallelism
+    tr = spark.createDataFrame(
+        [(f"c{i % 7}", i, f"<p>{i} &amp; x</p>") for i in range(400)],
+        "conv_id string, turn_idx int, text string")
+    for parts, want in ((4 * par, par), (1, 1), (par, par)):
+        src = tr.repartition(parts).cache()
+        try:
+            assert src.count() == 400
+            ex = extract_text(src, EXTRACT_CONFIG)
+            assert ex.rdd.getNumPartitions() == want, parts
+            top = _plan(ex).split("InMemoryTableScan")[0]
+            assert "Exchange" not in top
+            assert "Coalesce" in top or parts <= par, top
+            assert ex.agg(F.sum("n_chars_in")).collect()[0][0] == \
+                tr.agg(F.sum(F.length("text"))).collect()[0][0]
+        finally:
+            src.unpersist()
+    src = str(tmp_path / "tr")
+    tr.repartition(par).write.parquet(src)
+    assert spark.read.parquet(src).rdd.getNumPartitions() > 1
+    one = spark.read.parquet(src).coalesce(1).filter("turn_idx >= 0")
+    assert extract_text(one).rdd.getNumPartitions() == 1
+
+
 def test_events_argspec_plan_shuffle_free(spark):
     from html_parser_spark.operators.extract import events
 
