@@ -28,24 +28,40 @@ from html_parser_spark.functions.tagset import (
     PHRASE_TAGS,
 )
 from html_parser_spark.functions.tokenizer import (
+    _FAST_END,
+    _NAME_FIRST,
+    _SP,
+    _TAG_KEY_MAX,
+    _TAG_MEMO_MAX,
     ascii_lower,
     EV_END,
     EV_START,
     EV_TEXT,
+    fast_start_tag,
+    tokenize,
 )
 
 # Perl \s is ASCII-only on these code paths; Python re \s would also
 # eat U+00A0 etc. (t/tokeparser.t:93 requires "Perl\xA0Institute")
 _WS_RUN = re.compile(r"[ \t\n\r\f\x0b]+")
 _WS_EDGE = re.compile(r"^[ \t\n\r\f\x0b]+|[ \t\n\r\f\x0b]+$")
+#: a character str.split() treats as whitespace but Perl \s does not:
+#: Python's \S is the complement of str.isspace(), the predicate
+#: str.split() splits on, so the class is derived, not hand-listed
+_SPLIT_ONLY_WS = re.compile(r"[^\S \t\n\r\f\x0b]")
 
 
 def collapse_ws(s: str) -> str:
     """s/^\\s+//; s/\\s+$//; s/\\s+/ /g (TokeParser.pm:119).
 
-    One regex pass: runs collapse to a single space first, so edge
-    runs become exactly one leading/trailing space — str.strip(" ")
-    removes them, same result as a separate edge-trim pass."""
+    Without split-only whitespace (U+00A0 etc.), str.split() splits on
+    exactly the six Perl spaces, so the C-level split/join gives the
+    result. Otherwise one regex pass: runs collapse to a single space
+    first, so edge runs become exactly one leading/trailing space —
+    str.strip(" ") removes them, same result as a separate edge-trim
+    pass."""
+    if _SPLIT_ONLY_WS.search(s) is None:
+        return " ".join(s.split())
     return _WS_RUN.sub(" ", s).strip(" ")
 
 
@@ -126,6 +142,195 @@ def document_text(doc: str, rows, cfg: ParserConfig,
                   textify=DEFAULT_TEXTIFY) -> str:
     """Whole-turn main-content assembly: get_text in document mode."""
     return get_text(doc, rows, cfg, None, textify)[0]
+
+
+def _end_text(tname: str) -> str:
+    """What an end tag adds in document mode: " " unless it is phrase
+    markup (``</br>`` adds nothing; get_text's "br" test sees "/br")."""
+    return "" if tname in PHRASE_TAGS else " "
+
+
+#: the non-strict comment end (hparser.c:926-955)
+_COMMENT_END = re.compile(f"--[{_SP}]*>")
+#: a comment's action in the scan: an event that adds no text
+_COMMENT = (True, "", None)
+#: the close of a literal element the scan handles: the literal-mode
+#: scan (hparser.c:1557-1602) folds A-Z only, so re.A keeps U+017F and
+#: U+212A from matching 's' and 'k'
+_LITERAL_END = {
+    name: re.compile(f"</{name}[{_SP}]*>", re.I | re.A)
+    for name in ("script", "style", "title", "textarea")}
+
+
+def main_content_scanner(cfg: ParserConfig, textify=DEFAULT_TEXTIFY):
+    """Single-pass main-content extraction for one ``(cfg, textify)``:
+    returns ``scan(doc) -> (extracted_text, trimmed_text, n_events)``,
+    equal to ``tokenize`` -> ``document_text`` -> ``collapse_ws`` and
+    the event count, or None from ``scan`` when the document holds
+    markup outside the scan's subset. Returns None instead of ``scan``
+    when the configuration is outside it.
+
+    The scan runs C-level ``str.find`` from text run to tag and never
+    builds event rows. Each exact tag string maps through a memo to
+    what it does: add text (a space, or textify's alt text) and count
+    as an event, or vanish (an ``ignore_elements`` end tag), or open a
+    literal element. The subset is what the tokenizer's loose start-
+    tag grammar (``fast_start_tag``) and ``_FAST_END`` accept, plus
+    non-strict ``<!--`` comments (an event, no text), ignored
+    script/style elements (skipped without flushing the pending text,
+    as ``unbroken_text`` joins both sides before decoding) and
+    title/textarea (one decoded text event). Everything else returns
+    None: other ``<!`` and ``<?`` markup, start tags the fast grammar
+    rejects or that reach past the first '>', other end tags, xmp,
+    iframe and plaintext, non-ignored script/style, an unclosed literal
+    element or comment, and any '<' within 3 characters of the end
+    (EOF recovery).
+
+    The configuration gate mirrors the tokenizer's: ``unbroken_text``
+    on; no xml_mode, case_sensitive, strict_names, empty_element_tags,
+    backquote, marked_sections, strict_comment or skipped-text
+    tracking (it flushes pending text at ignored tags); every event
+    reported; no ignore/report tags; ``ignore_elements`` within
+    script/style; string textify specs only (the memo assumes a pure
+    spec). The memo is this scanner's own: its entries depend on
+    ``cfg`` and ``textify``.
+    """
+    ignored = frozenset(cfg.ignore_elements)
+    if not (cfg.unbroken_text
+            and not (cfg.xml_mode or cfg.case_sensitive
+                     or cfg.strict_names or cfg.empty_element_tags
+                     or cfg.backquote or cfg.marked_sections
+                     or cfg.strict_comment or cfg.track_skipped_text)
+            and cfg.reported_events is None
+            and not cfg.false_handler_events
+            and not cfg.ignore_tags and not cfg.report_tags
+            and ignored <= {"script", "style"}
+            and all(type(v) is str for v in textify.values())):
+        return None
+    memo: dict[str, tuple] = {}
+
+    def tag_action(doc: str, lt: int, gt: int):
+        """(reported, text, literal) for the tag at ``doc[lt:gt + 1]``,
+        or None if it is outside the subset; ``literal`` is None or
+        (close regex, end tag text or None when the element is
+        ignored)."""
+        if doc[lt + 1] == "/":
+            m = _FAST_END.match(doc, lt)
+            if m is None:
+                return None
+            tname = ascii_lower(m.group(1))
+            if tname in ignored:
+                return False, "", None
+            return True, _end_text(tname), None
+        fast = fast_start_tag(doc, lt, len(doc))
+        if fast is None or fast[0] != gt + 1:
+            return None
+        _, tokens, lit = fast
+        tname = ascii_lower(doc[tokens[0][0]:tokens[0][1]])
+        if lit is not None:
+            if tname in ignored:
+                return False, "", (_LITERAL_END[tname], None)
+            if lit[1]:  # xmp, iframe, plaintext, script, style
+                return None
+            lit = (_LITERAL_END[tname], _end_text(tname))
+        if tname in textify:
+            row = (EV_START, lt, gt + 1, tokens, False, 0, 1, 0, None,
+                   None)
+            return True, _textify(doc, row, cfg, tname,
+                                  textify[tname]), lit
+        return True, (" " if tname == "br" or tname not in PHRASE_TAGS
+                      else ""), lit
+
+    def scan(doc: str):
+        n = len(doc)
+        find = doc.find
+        get = memo.get
+        out: list[str] = []
+        pend: list[str] = []  # raw text of the pending text event
+        n_ev = 0
+        t = s = 0  # start of the current text run; scan position
+        gt = -1
+        while True:
+            lt = find("<", s)
+            if lt < 0:
+                break
+            if gt < lt:
+                gt = find(">", lt)
+                if gt < 0:
+                    gt = n
+            key = doc[lt:gt + 1] if gt - lt < _TAG_KEY_MAX else None
+            act = get(key)
+            end = gt + 1
+            if act is None:
+                if n - lt < 3:
+                    return None  # EOF recovery
+                c = doc[lt + 1]
+                if c == "!":
+                    m = (_COMMENT_END.search(doc, lt + 4)
+                         if doc.startswith("--", lt + 2) else None)
+                    if m is None:
+                        return None
+                    act, end = _COMMENT, m.end()
+                elif c == "/" or c in _NAME_FIRST:
+                    act = tag_action(doc, lt, gt) if gt < n else None
+                    if act is None:
+                        return None
+                    if key is not None and len(memo) < _TAG_MEMO_MAX:
+                        memo[key] = act
+                elif c == "?":
+                    return None
+                else:
+                    s = lt + 1  # not markup: the text run goes on
+                    continue
+            reported, text, lit = act
+            if lt > t:
+                pend.append(doc[t:lt])
+            if reported:
+                if pend:
+                    out.append(decode_entities("".join(pend)))
+                    pend.clear()
+                    n_ev += 1
+                n_ev += 1
+                if text:
+                    out.append(text)
+            t = s = end
+            if lit is not None:
+                close, end_text = lit
+                m = close.search(doc, s)
+                if m is None:
+                    return None
+                if end_text is not None:
+                    if m.start() > s:
+                        out.append(decode_entities(doc[s:m.start()]))
+                        n_ev += 1
+                    n_ev += 1
+                    if end_text:
+                        out.append(end_text)
+                t = s = m.end()
+        if n > t:
+            pend.append(doc[t:])
+        if pend:
+            out.append(decode_entities("".join(pend)))
+            n_ev += 1
+        txt = "".join(out)
+        return txt, collapse_ws(txt), n_ev
+
+    return scan
+
+
+def extract_document(doc: str, cfg: ParserConfig,
+                     textify=DEFAULT_TEXTIFY, scan=None):
+    """One turn's ``(extracted_text, trimmed_text, n_events)``: the
+    ``scan`` from :func:`main_content_scanner` when given and it
+    accepts the document, else the reference path ``tokenize`` ->
+    ``document_text`` -> ``collapse_ws``."""
+    if scan is not None:
+        got = scan(doc)
+        if got is not None:
+            return got
+    rows = tokenize(doc, cfg)
+    txt = document_text(doc, rows, cfg, textify)
+    return txt, collapse_ws(txt), len(rows)
 
 
 def get_trimmed_text(doc: str, rows, cfg: ParserConfig, endtags=(),
@@ -389,8 +594,6 @@ def strip_markup(doc: str, rows_unused, cfg: ParserConfig,
     """eg/hstrip pattern: reconstruct the document with styling tags
     dropped and style/script subtrees removed, using the engine's own
     tag filters (F1/F3) + the Filter.pm identity rewrite (Q9)."""
-    from html_parser_spark.functions.tokenizer import tokenize
-
     cfg2 = cfg.with_(ignore_tags=tuple(strip_tags),
                      ignore_elements=tuple(strip_elements),
                      unbroken_text=False)

@@ -105,7 +105,7 @@ _FAST_STEP = _re.compile(
 _FAST_END = _re.compile(f"</([^{_SP}>]+)[{_SP}]*>")
 
 #: exact-tag-substring -> relative token spans (see
-#: _fast_parse_start); shared across documents on a worker by design
+#: fast_start_tag); shared across documents on a worker by design
 _TAG_MEMO: dict[str, tuple] = {}
 _TAG_MEMO_MAX = 8192
 _TAG_KEY_MAX = 96
@@ -141,6 +141,71 @@ def _is_name_char(ch: str, strict: bool) -> bool:
     if strict:
         return ch in _NAME_CHAR
     return ch not in HSPACE and ch != ">"
+
+
+def _literal_of(doc: str, tag_span) -> tuple[str, bool] | None:
+    """(lowercased tag, is_cdata) when a start tag's name opens a
+    literal-mode element (hparser.c:1398-1410), else None: ONE
+    definition, so the FSM, the regex fast path and its memo cannot
+    silently diverge on literal elements."""
+    tag = ascii_lower(doc[tag_span[0]:tag_span[1]])
+    cdata = LITERAL_MODE_ELEMS.get(tag)
+    return None if cdata is None else (tag, cdata)
+
+
+def fast_start_tag(doc: str, beg: int, end: int):
+    """Regex fast path for the default (loose) start-tag grammar at
+    ``doc[beg] == '<'``: ``(position after '>', token spans,
+    _literal_of verdict)``, or None to defer to the FSM (any
+    ambiguous/premature/unsupported shape). Callers gate it on the
+    loose grammar (no strict names, empty-element tags or backquote).
+
+    Exact-substring memo: a corpus's tag vocabulary is heavy-
+    tailed (`<p>`, `</b>`, and even attr-carrying tags repeat
+    massively), and the substring -> token-spans mapping is a
+    pure context-free function, so previously parsed tag strings
+    replay as a dict hit + span shift instead of the per-
+    attribute regex walk. Entries are inserted ONLY when the walk
+    consumed exactly up to the first '>' (a quoted '>' inside an
+    attribute value makes the naive key a partial tag — those
+    shapes simply never memoize); size- and length-capped so
+    adversarial input can't grow the dict."""
+    gt = doc.find(">", beg, end)
+    key = None
+    if 0 <= gt and gt - beg < _TAG_KEY_MAX:
+        key = doc[beg:gt + 1]
+        hit = _TAG_MEMO.get(key)
+        if hit is not None:
+            tmpl, lit = hit
+            return (gt + 1,
+                    [t if t is None else (t[0] + beg, t[1] + beg)
+                     for t in tmpl],
+                    lit)
+    m = _FAST_TAGNAME.match(doc, beg, end)
+    if m is None:
+        return None
+    s = m.end()
+    tokens = [(beg + 1, s)]
+    step = _FAST_STEP.match
+    while True:
+        m = step(doc, s, end)
+        if m is None:
+            return None  # premature or '=' in name position etc.
+        if m.start(1) >= 0:
+            s = m.end()
+            break
+        tokens.append(m.span(2))
+        v = m.start(3)
+        tokens.append(None if v < 0 else m.span(3))
+        s = m.end()
+    lit = _literal_of(doc, tokens[0])
+    if (key is not None and s == gt + 1
+            and len(_TAG_MEMO) < _TAG_MEMO_MAX):
+        _TAG_MEMO[key] = (
+            tuple(t if t is None else (t[0] - beg, t[1] - beg)
+                  for t in tokens),
+            lit)
+    return s, tokens, lit
 
 
 class _Emitter:
@@ -412,87 +477,16 @@ class _Parser:
 
     # -- sub-parsers; return new position, beg (premature) or None ------
 
-    def _fast_parse_start(self, beg: int) -> int | None:
-        """Regex fast path for the default tag grammar; returns the
-        position after '>' on success, -1 to defer to the FSM (any
-        ambiguous/premature/unsupported shape).
-
-        Exact-substring memo: a corpus's tag vocabulary is heavy-
-        tailed (`<p>`, `</b>`, and even attr-carrying tags repeat
-        massively), and the substring -> token-spans mapping is a
-        pure context-free function, so previously parsed tag strings
-        replay as a dict hit + span shift instead of the per-
-        attribute regex walk. Entries are inserted ONLY when the walk
-        consumed exactly up to the first '>' (a quoted '>' inside an
-        attribute value makes the naive key a partial tag — those
-        shapes simply never memoize); size- and length-capped so
-        adversarial input can't grow the dict."""
-        doc = self.doc
-        end = self.end
-        gt = doc.find(">", beg, end)
-        key = None
-        if 0 <= gt and gt - beg < _TAG_KEY_MAX:
-            key = doc[beg:gt + 1]
-            hit = _TAG_MEMO.get(key)
-            if hit is not None:
-                tmpl, lit = hit
-                tokens = [t if t is None else (t[0] + beg, t[1] + beg)
-                          for t in tmpl]
-                s = gt + 1
-                self._report(EV_START, beg, s, tokens)
-                # literal-mode entry precomputed at insert time (the
-                # xml_mode gate stays dynamic, as _maybe_enter_literal)
-                if lit is not None and not self.cfg.xml_mode:
-                    self.literal_mode, self.is_cdata = lit
-                return s
-        m = _FAST_TAGNAME.match(doc, beg, end)
-        if m is None:
-            return -1
-        s = m.end()
-        tokens = [(beg + 1, s)]
-        step = _FAST_STEP.match
-        while True:
-            m = step(doc, s, end)
-            if m is None:
-                return -1  # premature or '=' in name position etc.
-            if m.start(1) >= 0:
-                s = m.end()
-                break
-            tokens.append(m.span(2))
-            v = m.start(3)
-            tokens.append(None if v < 0 else m.span(3))
-            s = m.end()
-        if (key is not None and s == gt + 1
-                and len(_TAG_MEMO) < _TAG_MEMO_MAX):
-            tagl = ascii_lower(doc[tokens[0][0]:tokens[0][1]])
-            cd = LITERAL_MODE_ELEMS.get(tagl)
-            _TAG_MEMO[key] = (
-                tuple(t if t is None else (t[0] - beg, t[1] - beg)
-                      for t in tokens),
-                None if cd is None else (tagl, cd))
-        self._report(EV_START, beg, s, tokens)
-        self._maybe_enter_literal(tokens[0])
-        return s
-
-    def _maybe_enter_literal(self, tag_span) -> None:
-        """Shared literal-mode entry for the regex fast path and the
-        FSM (hparser.c:1398-1410): ONE definition so the two start
-        parsers cannot silently diverge on literal elements."""
-        if self.cfg.xml_mode:
-            return
-        tb, te = tag_span
-        tag = ascii_lower(self.doc[tb:te])
-        cdata = LITERAL_MODE_ELEMS.get(tag)
-        if cdata is not None:
-            self.literal_mode = tag
-            self.is_cdata = cdata
-
     def _parse_start(self, beg: int) -> int | None:
         # hparser.c:1267-1438
         if self.fast_start:
-            pos = self._fast_parse_start(beg)
-            if pos >= 0:
-                return pos
+            fast = fast_start_tag(self.doc, beg, self.end)
+            if fast is not None:
+                s, tokens, lit = fast
+                self._report(EV_START, beg, s, tokens)
+                if lit is not None and not self.cfg.xml_mode:
+                    self.literal_mode, self.is_cdata = lit
+                return s
         doc, end = self.doc, self.end
         cfg = self.cfg
         strict, allow_empty = self.strict, self.allow_empty
@@ -586,7 +580,9 @@ class _Parser:
                 # artificial end event (hparser.c:1394-1396)
                 self._report(EV_END, s, s, tokens[:1])
             elif not cfg.xml_mode:
-                self._maybe_enter_literal(tokens[0])
+                lit = _literal_of(doc, tokens[0])
+                if lit is not None:
+                    self.literal_mode, self.is_cdata = lit
             return s
         return None
 

@@ -12,6 +12,8 @@ without leaving the JVM.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -319,15 +321,18 @@ def c4_quality(df: DataFrame, key_cols: list[str],
     retention (>= `min_line_words` words AND terminal punctuation
     ``. ! ? "`` AND no "javascript"), then page-level rules over what
     survived — >= `min_sentences` sentences, no "lorem ipsum", no
-    ``{``, no badword. Each rule is its own boolean column plus the
-    conjunction so a curation run can audit which rule rejected a
-    page. C4's remaining rule (three-sentence-span dedup across
+    ``{``, no badword. A badword matches case-insensitively where no
+    word character (Unicode ``\\w``) touches it, so ``badword1,`` and
+    ``badword1.`` count and ``badword1x`` does not: C4's
+    ``(?:\\W|^)word(?:\\W|$)`` rule. Each rule is its own boolean
+    column plus the conjunction so a curation run can audit which rule
+    rejected a page. C4's remaining rule (three-sentence-span dedup across
     pages) is the passage tier — :func:`~html_parser_spark.operators.
     dedup.passage_dedup` — not re-implemented here.
 
     Pure JVM: the line filter is one higher-order ``F.filter`` over
     ``split(text, '\\n')``, sentence counting is one regexp scan of
-    the kept text, the page checks are substring/array-overlap tests.
+    the kept text, the page checks are substring/regex tests.
     One codegen stage, shuffle-free, no Python — at 100 TB this is a
     map-only pass like its Gopher sibling.
     """
@@ -340,8 +345,9 @@ def c4_quality(df: DataFrame, key_cols: list[str],
         & ln.rlike('[.!?"]$')
         & ~F.lower(ln).contains("javascript"))
     kept_text = F.array_join(kept, "\n")
-    bad_arr = F.array(*[F.lit(b) for b in badwords])
-    page_words = F.split(F.lower(F.trim(t)), r"\s+")
+    # (?U): Java's \w is ASCII-only without it
+    bad_re = "(?U)(?<!\\w)(?:%s)(?!\\w)" % "|".join(
+        re.escape(b.lower()) for b in badwords)
     feats = df.select(
         *key_cols,
         F.size(lines).cast("long").alias("n_lines"),
@@ -350,7 +356,8 @@ def c4_quality(df: DataFrame, key_cols: list[str],
         .cast("long").alias("n_sentences"),
         (~F.lower(t).contains("lorem ipsum")).alias("ok_no_lorem"),
         (~t.contains("{")).alias("ok_no_brace"),
-        (~F.arrays_overlap(page_words, bad_arr)).alias("ok_no_badword"),
+        (~F.lower(t).rlike(bad_re) if badwords else F.lit(True))
+        .alias("ok_no_badword"),
     )
     checks = {
         "ok_lines": F.col("n_kept_lines") >= 1,

@@ -130,13 +130,14 @@ def url_filter(df: DataFrame, url_col: str = "url",
     for w in soft_words:
         soft = soft + F.when(low.contains(w.lower()),
                              F.lit(1)).otherwise(F.lit(0))
-    out = df.select(
-        "*",
-        host.alias("host"),
-        blocked_dom.alias("blocked_domain"),
-        blocked_pat.alias("blocked_pattern"),
-        soft.cast("int").alias("soft_score"),
-    )
+    # withColumns replaces a same-named input column (a 'host' join
+    # key, say) instead of adding an ambiguous second one
+    out = df.withColumns({
+        "host": host,
+        "blocked_domain": blocked_dom,
+        "blocked_pattern": blocked_pat,
+        "soft_score": soft.cast("int"),
+    })
     return out.withColumn(
         "keep_url",
         ~F.col("blocked_domain") & ~F.col("blocked_pattern")

@@ -280,7 +280,13 @@ def _zip_build(members: list[tuple[str, bytes]],
 def parse_zip(payload: bytes) -> list[tuple[str, bytes]]:
     """zip -> [(member_name, data), ...] via the EOCD + central
     directory. Stored and deflate members decode; others and
-    corrupt/truncated entries are skipped (never raises)."""
+    corrupt/truncated entries are skipped (never raises). Data
+    prepended to the archive (a self-extractor stub, a zip embedded at
+    an offset) shifts the central directory and every local header by
+    the distance between the EOCD and where the directory says it
+    ends. ZIP64 is not supported: an archive over 65,535 entries or
+    4 GiB keeps its real counts and offsets in the ZIP64 records this
+    parser does not read, so it yields no members or only some."""
     import struct as _s
     import zlib
 
@@ -290,11 +296,14 @@ def parse_zip(payload: bytes) -> list[tuple[str, bytes]]:
         i = tail.rfind(b"PK\x05\x06")
         if i < 0:
             return []
-        base = len(payload) - len(tail)
+        eocd = len(payload) - len(tail) + i
         n_entries, _, cd_size, cd_off = _s.unpack(
             "<HHII", tail[i + 8:i + 20])
+        # bytes prepended; a directory that claims to end past the
+        # EOCD is read where it says, as before
+        shift = max(0, eocd - (cd_off + cd_size))
         out: list[tuple[str, bytes]] = []
-        pos = cd_off
+        pos = cd_off + shift
         for _ in range(min(n_entries, len(payload) // 46 + 1)):
             if payload[pos:pos + 4] != b"PK\x01\x02":
                 break
@@ -304,6 +313,7 @@ def parse_zip(payload: bytes) -> list[tuple[str, bytes]]:
             name = payload[pos + 46:pos + 46 + nlen].decode(
                 "utf-8", "replace")
             pos += 46 + nlen + elen + clen
+            off += shift
             lh = payload[off:off + 30]
             if lh[:4] != b"PK\x03\x04":
                 continue

@@ -2531,6 +2531,25 @@ def test_pdf_parser_robustness():
     assert _content_text(b"BT (ab\\\r\ncd ef\\\rgh) Tj ET") == "abcd efgh"
 
 
+def test_parse_zip_prepended_data():
+    """A zip behind prepended bytes (a self-extractor stub) still
+    yields its members: the central directory and local-header
+    offsets shift by the prepended length."""
+    import io
+    import zipfile
+
+    from html_parser_spark.sources.tarshard import _zip_build, parse_zip
+
+    members = [("a.txt", b"alpha"), ("dir/b.json", b'{"b": 2}' * 40)]
+    for deflate in (False, True):
+        zp = b"#!stub\n" + bytes(range(256)) + _zip_build(members,
+                                                          deflate)
+        assert parse_zip(zp) == members
+        zf = zipfile.ZipFile(io.BytesIO(zp))
+        assert [(zi.filename, zf.read(zi)) for zi in zf.infolist()] \
+            == members
+
+
 def test_invalid_unicode_entity_doc_survives(spark):
     """The reference's byte-granular surrogate chop can produce text
     that is not valid Unicode (kept bug-for-bug in decode_entities);
@@ -3300,6 +3319,22 @@ def test_url_filter_gates(spark):
     assert "Exchange" not in plan and "Python" not in plan
 
 
+def test_url_filter_replaces_existing_host(spark):
+    """An input that already has a 'host' column keeps one: url_filter
+    replaces it with the URL's host, so F.col('host') resolves."""
+    from pyspark.sql import functions as F
+
+    from html_parser_spark.operators.urls import url_filter
+
+    df = spark.createDataFrame(
+        [("stale.example", "https://Fresh.Example/a")],
+        "host string, url string")
+    out = url_filter(df, blocked_domains=("fresh.example",))
+    assert out.columns.count("host") == 1
+    row = out.select(F.col("host"), "blocked_domain").first()
+    assert row.host == "fresh.example" and row.blocked_domain
+
+
 def test_term_freq(spark):
     df = spark.createDataFrame(
         [(0, "the cat and The dog"), (1, "the dog runs")],
@@ -3363,6 +3398,11 @@ def test_c4_quality_rules(spark):
         (5, "only two sentences on this page today.\n"
             "the second and last one is right here."),        # < 3
         (6, None),                                            # NULL
+        # badwords next to punctuation still count; inside a longer
+        # word they do not
+        (7, good + "\nthis page mentions badword1, openly."),
+        (8, good + "\nthis page ends with BADWORD2."),
+        (9, good + "\nthis page mentions badword1x only."),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: r for r in
@@ -3375,6 +3415,8 @@ def test_c4_quality_rules(spark):
     assert not got[4].ok_no_badword and not got[4].passes_c4
     assert got[5].n_sentences == 2 and not got[5].ok_sentences
     assert got[6].n_kept_lines == 0 and not got[6].passes_c4
+    assert not got[7].ok_no_badword and not got[8].ok_no_badword
+    assert got[9].ok_no_badword and got[9].passes_c4
 
 
 def test_dedup_corpus_composition(spark):
