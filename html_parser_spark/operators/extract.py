@@ -30,15 +30,19 @@ or balanced output files.
 Each Python task also pays a fixed cost before its first row, beside
 transfer and interpretation. pyspark 4.1's worker calls
 ``importlib.invalidate_caches()`` on every task, and on Python 3.11
-that makes each ``zipimporter`` on the worker's path re-read the
-directory of ``pyspark.zip`` (1,328 entries): ~0.13 s on an idle
-4-vCPU host, ~0.28 s median under a ``local[4]`` load. The cost is per
-task, not per row, so ``extract_text`` sizes its map by input bytes
-(``_size_tasks``): Spark's file-split rule, ``max(defaultParallelism,
-ceil(input bytes / spark.sql.files.maxPartitionBytes))``, applied by
-coalesce to an input that is already partitioned. A cached input of
-16 small partitions on 4 cores then runs as one wave of 4 tasks; a
-large scan keeps about its own split count.
+and 3.12 that makes each ``zipimporter`` on the worker's path re-read
+its archive's directory (13 importers on ``pyspark.zip``'s 1,328
+entries, 2 on the spark-core jar's 5,359): 0.14-0.43 s per task at
+``local[4]``. Importing this package installs stat-checked importers
+(``html_parser_spark.zipcache``), so a worker pays that re-read once,
+on its first task, and 0.1-0.2 ms on each later one. The rest of the
+per-task cost is not zero, so ``extract_text`` still sizes its map by
+input bytes (``_size_tasks``): Spark's file-split rule,
+``max(defaultParallelism, ceil(input bytes /
+spark.sql.files.maxPartitionBytes))``, applied by coalesce to an input
+that is already partitioned. A cached input of 16 small partitions on
+4 cores then runs as one wave of 4 tasks; a large scan keeps about its
+own split count.
 """
 
 from __future__ import annotations
@@ -166,11 +170,13 @@ def _size_tasks(df: DataFrame) -> DataFrame:
     optimized plan's leaves (scans, cached relations). Every Python
     task pays a fixed worker cost before its first row (module
     docstring), so an over-partitioned input should run as one wave
-    of tasks. Coalesce never adds partitions or a shuffle. Streaming
-    input, a leaf with no size estimate (``spark.sql.defaultSizeInBytes``,
-    Long.MaxValue unless set) and an input the caller already
-    coalesced (the optimizer would merge that coalesce into ours)
-    pass through.
+    of tasks. With the zip re-read paid once per worker, dropping
+    this still makes the ``extract`` benchmark's job slower: 1.53 s
+    against 1.35 s median over 8 jobs at ``local[4]``. Coalesce never
+    adds partitions or a shuffle. Streaming input, a leaf with no size
+    estimate (``spark.sql.defaultSizeInBytes``, Long.MaxValue unless
+    set) and an input the caller already coalesced (the optimizer
+    would merge that coalesce into ours) pass through.
     """
     if df.isStreaming:
         return df

@@ -1,15 +1,19 @@
-"""Structured Streaming surface: the same fused tokenize+extract
-stage applied to a transcript stream.
+"""Structured Streaming surface for the transcript engine.
 
 The reference's "incremental chunk feed" (`Parser.pm:168-170`) is
 bounded-buffer incremental parsing, not event-time streaming — per
 SURVEY.md §2.6 there are no watermark semantics to port. What a
 production corpus DOES need is continuous ingestion: new transcript
 turns land (Iceberg snapshot / Kafka topic / file drop) and flow
-through the identical extraction operators. Because every operator
-is per-turn (stateless across rows), the batch `mapInArrow` stage
-is reused VERBATIM — `extract_text(stream_df)` — and the stream
-stays shuffle-free end-to-end (append mode, no stateful operator).
+through the identical extraction operators. Every per-row operator
+(``extract_text``, ``events``, ``links``, ``main_content``,
+``warc_records``, ``extract_pdf_text``...) is a stateless Arrow map,
+so it takes a stream DataFrame as it is — ``extract_text(stream_df)``
+— and the stream stays shuffle-free end-to-end (append mode, no
+stateful operator). This module holds only what a stream needs
+beyond that: the file-drop source, the stream forms of
+decontamination and exact dedup, sessionization, the windowed
+rollup and the sinks.
 
 For conversation-level rollups (e.g. turns per conv per window) we
 add the standard watermark + window aggregation, which IS stateful —
@@ -36,14 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from html_parser_spark.config import EXTRACT_CONFIG, ParserConfig
-from html_parser_spark.operators.extract import (
-    events,
-    extract_text,
-    head_headers,
-    links,
-)
-
 
 def read_transcript_stream(spark: SparkSession, path: str,
                            schema) -> DataFrame:
@@ -51,102 +47,6 @@ def read_transcript_stream(spark: SparkSession, path: str,
     micro-batch of turns (sandbox stand-in for an Iceberg streaming
     read / Kafka topic)."""
     return spark.readStream.schema(schema).parquet(path)
-
-
-def extract_text_stream(stream_df: DataFrame,
-                        cfg: ParserConfig = EXTRACT_CONFIG) -> DataFrame:
-    """Streaming flagship: identical operator, streaming input.
-    Stateless ⇒ append output mode, no watermark required."""
-    return extract_text(stream_df, cfg)
-
-
-def head_headers_stream(stream_df: DataFrame,
-                        cfg: ParserConfig | None = None) -> DataFrame:
-    """HeadParser metadata capture over a stream — the batch operator
-    verbatim (per-turn, stateless, append mode)."""
-    if cfg is None:
-        return head_headers(stream_df)
-    return head_headers(stream_df, cfg)
-
-
-def links_stream(stream_df: DataFrame,
-                 cfg: ParserConfig = ParserConfig(),
-                 base: str | None = None) -> DataFrame:
-    """LinkExtor link extraction over a stream — the batch operator
-    verbatim (per-turn, stateless, append mode)."""
-    return links(stream_df, cfg, base)
-
-
-def events_stream(stream_df: DataFrame,
-                  cfg: ParserConfig = ParserConfig(),
-                  fields: tuple[str, ...] | None = None) -> DataFrame:
-    """The FULL event surface over a stream — the batch ``events()``
-    operator verbatim, argspec (``fields=``) included: per-turn
-    fan-out happens inside the Arrow batch, so the stream stays
-    stateless and shuffle-free (append mode, no watermark)."""
-    return events(stream_df, cfg, fields=fields)
-
-
-def main_content_stream(stream_df: DataFrame, **kw) -> DataFrame:
-    """Boilerplate-stripped main-content assembly over a stream —
-    the batch operator verbatim (per-turn Arrow fan-out, stateless,
-    append mode)."""
-    from html_parser_spark.operators.content import main_content
-    return main_content(stream_df, **kw)
-
-
-def content_blocks_stream(stream_df: DataFrame, **kw) -> DataFrame:
-    """Per-block content/boilerplate classification over a stream —
-    the batch operator verbatim (stateless, append mode)."""
-    from html_parser_spark.operators.content import content_blocks
-    return content_blocks(stream_df, **kw)
-
-
-def tables_stream(stream_df: DataFrame, **kw) -> DataFrame:
-    """Structured table-cell extraction over a stream — the batch
-    operator verbatim (per-turn Arrow fan-out, stateless, append)."""
-    from html_parser_spark.operators.content import extract_tables
-    return extract_tables(stream_df, **kw)
-
-
-def pdf_text_stream(stream_df: DataFrame, **kw) -> DataFrame:
-    """PDF text extraction over a stream of binary payloads — the
-    batch Arrow codec stage verbatim (stateless map, append mode)."""
-    from html_parser_spark.operators.pdf import extract_pdf_text
-    return extract_pdf_text(stream_df, **kw)
-
-
-def media_meta_stream(stream_df: DataFrame, **kw) -> DataFrame:
-    """Image-header metadata decode over a stream of binary payloads
-    — the batch Arrow codec stage verbatim (stateless, append)."""
-    from html_parser_spark.operators.media import decode_image_meta
-    return decode_image_meta(stream_df, **kw)
-
-
-def video_frames_stream(stream_df: DataFrame, **kw) -> DataFrame:
-    """MP4 frame sampling over a stream of binary payloads — the
-    batch box-walk + per-frame JPEG decode verbatim (stateless
-    Arrow map, append mode): a live video-ingest feed samples
-    frames with the same code path the batch backfill uses."""
-    from html_parser_spark.operators.video import sample_video_frames
-    return sample_video_frames(stream_df, **kw)
-
-
-def warc_records_stream(stream_df: DataFrame, **kw) -> DataFrame:
-    """WARC record extraction over a stream of binary segments —
-    the batch walk verbatim (stateless Arrow map, append mode): a
-    live crawl feed parses with the same code path the batch
-    backfill uses."""
-    from html_parser_spark.sources.warc import warc_records
-    return warc_records(stream_df, **kw)
-
-
-def tar_members_stream(stream_df: DataFrame, **kw) -> DataFrame:
-    """WebDataset tar-member extraction over a stream of binary
-    shards — the batch walk verbatim (stateless Arrow map, append
-    mode)."""
-    from html_parser_spark.sources.tarshard import tar_members
-    return tar_members(stream_df, **kw)
 
 
 def decontaminate_stream(stream_df: DataFrame, eval_df: DataFrame,

@@ -709,7 +709,7 @@ def test_extract_text_stream_matches_batch(spark, tmp_path):
     tr.write.parquet(src)
 
     stream = es.read_transcript_stream(spark, src, tr.schema)
-    q = (es.extract_text_stream(stream, EXTRACT_CONFIG)
+    q = (extract_text(stream, EXTRACT_CONFIG)
          .writeStream.format("memory").queryName("ex_stream")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -740,10 +740,10 @@ def test_headers_links_stream_match_batch(spark, tmp_path):
     tr.write.parquet(src)
     stream = es.read_transcript_stream(spark, src, tr.schema)
 
-    qh = (es.head_headers_stream(stream)
+    qh = (head_headers(stream)
           .writeStream.format("memory").queryName("hdr_stream")
           .outputMode("append").trigger(availableNow=True).start())
-    ql = (es.links_stream(stream)
+    ql = (links(stream)
           .writeStream.format("memory").queryName("lnk_stream")
           .outputMode("append").trigger(availableNow=True).start())
     qh.awaitTermination(120)
@@ -780,11 +780,11 @@ def test_events_stream_matches_batch(spark, tmp_path):
     tr.write.parquet(src)
     stream = es.read_transcript_stream(spark, src, tr.schema)
 
-    qe = (es.events_stream(stream)
+    qe = (events(stream)
           .writeStream.format("memory").queryName("ev_stream")
           .outputMode("append").trigger(availableNow=True).start())
-    qa = (es.events_stream(stream, ParserConfig(),
-                           fields=("event", "tag", "offset"))
+    qa = (events(stream, ParserConfig(),
+                 fields=("event", "tag", "offset"))
           .writeStream.format("memory").queryName("ev_stream_argspec")
           .outputMode("append").trigger(availableNow=True).start())
     qe.awaitTermination(120)

@@ -532,7 +532,6 @@ def test_warc_and_tar_streams_match_batch(spark, tmp_path):
         synth_tar_shards, tar_members)
     from html_parser_spark.sources.warc import (
         synth_warc, warc_records)
-    from html_parser_spark.streaming import extract_stream as es
 
     docs = spark.createDataFrame(
         [(i, f"<p>doc {i}</p>") for i in range(6)],
@@ -545,11 +544,11 @@ def test_warc_and_tar_streams_match_batch(spark, tmp_path):
     synth_tar_shards(docs).write.parquet(tsrc)
     bschema = "doc_id long, payload binary"
 
-    qw = (es.warc_records_stream(
+    qw = (warc_records(
             spark.readStream.schema(bschema).parquet(wsrc))
           .writeStream.format("memory").queryName("warc_stream")
           .outputMode("append").trigger(availableNow=True).start())
-    qt = (es.tar_members_stream(
+    qt = (tar_members(
             spark.readStream.schema(bschema).parquet(tsrc))
           .writeStream.format("memory").queryName("tar_stream")
           .outputMode("append").trigger(availableNow=True).start())
@@ -729,10 +728,10 @@ def test_main_content_stream_matches_batch(spark, tmp_path):
     tr.write.parquet(src)
     stream = es.read_transcript_stream(spark, src, tr.schema)
 
-    qm = (es.main_content_stream(stream)
+    qm = (main_content(stream)
           .writeStream.format("memory").queryName("mc_stream")
           .outputMode("append").trigger(availableNow=True).start())
-    qb = (es.content_blocks_stream(stream)
+    qb = (content_blocks(stream)
           .writeStream.format("memory").queryName("cb_stream")
           .outputMode("append").trigger(availableNow=True).start())
     qm.awaitTermination(120)
@@ -764,7 +763,7 @@ def test_tables_stream_matches_batch(spark, tmp_path):
     src = str(tmp_path / "tbl_src")
     tr.write.parquet(src)
     stream = es.read_transcript_stream(spark, src, tr.schema)
-    q = (es.tables_stream(stream)
+    q = (extract_tables(stream)
          .writeStream.format("memory").queryName("tbl_stream")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -782,7 +781,6 @@ def test_pdf_and_media_stream_match_batch(spark, tmp_path):
         decode_image_meta, synth_image_payloads)
     from html_parser_spark.operators.pdf import (
         extract_pdf_text, synth_pdf_payloads)
-    from html_parser_spark.streaming import extract_stream as es
 
     docs = spark.createDataFrame(
         [(i, f"body text {i}") for i in range(6)],
@@ -794,11 +792,11 @@ def test_pdf_and_media_stream_match_batch(spark, tmp_path):
     synth_image_payloads(docs).write.parquet(img_src)
     bschema = "doc_id long, payload binary"
 
-    qp = (es.pdf_text_stream(
+    qp = (extract_pdf_text(
             spark.readStream.schema(bschema).parquet(pdf_src))
           .writeStream.format("memory").queryName("pdf_stream")
           .outputMode("append").trigger(availableNow=True).start())
-    qi = (es.media_meta_stream(
+    qi = (decode_image_meta(
             spark.readStream.schema(bschema).parquet(img_src))
           .writeStream.format("memory").queryName("img_stream")
           .outputMode("append").trigger(availableNow=True).start())
@@ -827,7 +825,6 @@ def test_video_frames_stream_matches_batch(spark, tmp_path):
     payloads (stateless Arrow map, append mode)."""
     from html_parser_spark.operators.video import (
         sample_video_frames, synth_mp4_videos)
-    from html_parser_spark.streaming import extract_stream as es
 
     docs = spark.createDataFrame(
         [(i, f"body text {i}") for i in range(6)],
@@ -835,7 +832,7 @@ def test_video_frames_stream_matches_batch(spark, tmp_path):
     src = str(tmp_path / "mp4_src")
     synth_mp4_videos(docs).write.parquet(src)
 
-    q = (es.video_frames_stream(
+    q = (sample_video_frames(
             spark.readStream.schema("doc_id long, payload binary")
             .parquet(src), every_n=2)
          .writeStream.format("memory").queryName("vid_stream")
