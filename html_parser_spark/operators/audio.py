@@ -1,6 +1,6 @@
 """Audio-column decode: a real WAV/RIFF PCM parser over opaque
-``binary`` payloads, through the same Arrow-batched ``mapInPandas``
-plumbing as the image and PDF decoders — the audio leg of the
+``binary`` payloads, through the same ``arrow_map`` Arrow boundary
+as the image and PDF decoders — the audio leg of the
 multimodal column family.
 
 What is REAL (public RIFF/WAVE layout, as in the multimedia
@@ -35,11 +35,11 @@ form, so the parser is verified against real bytes.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from html_parser_spark.arrowmap import arrow_map, synth_payloads
 
 AUDIO_STATS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -98,19 +98,7 @@ def _synth_wav(doc_id: int) -> bytes:
 def synth_wav_audio(df: DataFrame,
                     key_col: str = "doc_id") -> DataFrame:
     """(doc_id, payload binary) of deterministic complete WAVs."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [_synth_wav(int(k)) for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(df, key_col, _synth_wav)
 
 
 def decode_wav_stats_bytes(payload: bytes) -> tuple:
@@ -172,27 +160,8 @@ def decode_wav_stats(df: DataFrame, key_col: str = "doc_id",
     """binary WAV payloads -> exact PCM statistics via Arrow-batched
     UDF; one pass, no shuffle — the audio twin of
     ``decode_image_pixels``."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = [decode_wav_stats_bytes(bytes(p))
-                   if p is not None else (None,) * 5
-                   for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "sample_rate": pd.array([r[0] for r in res],
-                                        dtype="Int64"),
-                "channels": pd.array([r[1] for r in res],
-                                     dtype="Int64"),
-                "n_frames": pd.array([r[2] for r in res],
-                                     dtype="Int64"),
-                "sum_sq": pd.array([r[3] for r in res],
-                                   dtype="Int64"),
-                "peak": pd.array([r[4] for r in res], dtype="Int64"),
-            })
-
-    return df.select(key_col, payload_col).mapInPandas(
-        run, AUDIO_STATS_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, AUDIO_STATS_SCHEMA,
+                     lambda p: (decode_wav_stats_bytes(p),))
 
 
 # ----------------------------------------------- MPEG audio headers
@@ -254,20 +223,7 @@ def _synth_mp3(doc_id: int) -> bytes:
 def synth_mp3_audio(df: DataFrame,
                     key_col: str = "doc_id") -> DataFrame:
     """Deterministic MP3 fixture blobs (see :func:`_synth_mp3`)."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [_synth_mp3(int(k))
-                            for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(df, key_col, _synth_mp3)
 
 
 def parse_mp3_meta(payload: bytes) -> tuple:
@@ -325,26 +281,8 @@ def decode_mp3_meta(df: DataFrame, key_col: str = "doc_id",
     output reuses AUDIO_STATS_SCHEMA's columns with sum_sq carrying
     bitrate_kbps and peak carrying duration_ms (the variant-tagged
     merge idiom — the driver query labels the arm)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = [parse_mp3_meta(bytes(p))
-                   if p is not None else (None,) * 5
-                   for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "sample_rate": pd.array([r[0] for r in res],
-                                        dtype="Int64"),
-                "channels": pd.array([r[1] for r in res],
-                                     dtype="Int64"),
-                "n_frames": pd.array([r[2] for r in res],
-                                     dtype="Int64"),
-                "sum_sq": pd.array([r[3] for r in res],
-                                   dtype="Int64"),
-                "peak": pd.array([r[4] for r in res], dtype="Int64"),
-            })
-
-    return df.select(key_col, payload_col).mapInPandas(
-        run, AUDIO_STATS_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, AUDIO_STATS_SCHEMA,
+                     lambda p: (parse_mp3_meta(p),))
 
 
 # --------------------------------------------------- FLAC STREAMINFO
@@ -389,20 +327,7 @@ def _synth_flac(doc_id: int) -> bytes:
 def synth_flac_audio(df: DataFrame,
                      key_col: str = "doc_id") -> DataFrame:
     """Deterministic FLAC fixture blobs (see :func:`_synth_flac`)."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [_synth_flac(int(k))
-                            for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(df, key_col, _synth_flac)
 
 
 def parse_flac_meta(payload: bytes) -> tuple:
@@ -444,23 +369,5 @@ def decode_flac_meta(df: DataFrame, key_col: str = "doc_id",
     """binary FLAC payloads -> STREAMINFO metadata in the shared
     AUDIO_STATS_SCHEMA columns (sum_sq carries bits_per_sample,
     peak carries duration_ms — the variant-tagged merge idiom)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = [parse_flac_meta(bytes(p))
-                   if p is not None else (None,) * 5
-                   for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "sample_rate": pd.array([r[0] for r in res],
-                                        dtype="Int64"),
-                "channels": pd.array([r[1] for r in res],
-                                     dtype="Int64"),
-                "n_frames": pd.array([r[2] for r in res],
-                                     dtype="Int64"),
-                "sum_sq": pd.array([r[3] for r in res],
-                                   dtype="Int64"),
-                "peak": pd.array([r[4] for r in res], dtype="Int64"),
-            })
-
-    return df.select(key_col, payload_col).mapInPandas(
-        run, AUDIO_STATS_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, AUDIO_STATS_SCHEMA,
+                     lambda p: (parse_flac_meta(p),))

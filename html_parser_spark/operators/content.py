@@ -28,10 +28,11 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from html_parser_spark.arrowmap import arrow_map
 from html_parser_spark.config import ParserConfig
 from html_parser_spark.functions import assemble, project
 from html_parser_spark.functions.tokenizer import ascii_lower, tokenize
-from html_parser_spark.operators.extract import _fanout_arrow
+from html_parser_spark.operators.extract import KEY_COLS
 
 #: block-level elements that delimit content blocks (HTML4/5 block
 #: and sectioning tags — public tag-category knowledge, the same
@@ -161,7 +162,7 @@ def content_blocks(df: DataFrame, cfg: ParserConfig = CONTENT_CONFIG,
                 _blocks(doc, cfg, min_words, max_link_density)):
             yield i, txt, n_words, ld, keep
 
-    return _fanout_arrow(df, text_col, BLOCKS_SCHEMA, per_turn)
+    return arrow_map(df, KEY_COLS, text_col, BLOCKS_SCHEMA, per_turn)
 
 
 def main_content(df: DataFrame, cfg: ParserConfig = CONTENT_CONFIG,
@@ -178,7 +179,7 @@ def main_content(df: DataFrame, cfg: ParserConfig = CONTENT_CONFIG,
         kept = [b[0] for b in blocks if b[3]]
         yield sep.join(kept), len(blocks), len(kept)
 
-    return _fanout_arrow(df, text_col, MAIN_SCHEMA, per_turn)
+    return arrow_map(df, KEY_COLS, text_col, MAIN_SCHEMA, per_turn)
 
 
 def _table_cells(doc: str, cfg: ParserConfig):
@@ -323,4 +324,4 @@ def extract_tables(df: DataFrame, cfg: ParserConfig = CONTENT_CONFIG,
     def per_turn(doc):
         yield from _table_cells(doc, cfg)
 
-    return _fanout_arrow(df, text_col, TABLES_SCHEMA, per_turn)
+    return arrow_map(df, KEY_COLS, text_col, TABLES_SCHEMA, per_turn)

@@ -51,7 +51,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
+from html_parser_spark.arrowmap import _pa_arr, arrow_map
 from html_parser_spark.config import EXTRACT_CONFIG, ParserConfig
 from html_parser_spark.functions import assemble
 from html_parser_spark.functions.tagset import DEFAULT_TEXTIFY
@@ -59,99 +61,6 @@ from html_parser_spark.functions.tokenizer import tokenize
 
 #: key columns carried through every per-turn operator
 KEY_COLS = ("conv_id", "turn_idx")
-
-
-def _to_arrow_type(dt):
-    """Spark -> Arrow physical type for the field types used here."""
-    import pyarrow as pa
-
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.BooleanType):
-        return pa.bool_()
-    if isinstance(dt, T.MapType):
-        return pa.map_(_to_arrow_type(dt.keyType),
-                       _to_arrow_type(dt.valueType))
-    if isinstance(dt, T.ArrayType):
-        return pa.list_(_to_arrow_type(dt.elementType))
-    raise TypeError(f"unmapped Spark type: {dt}")
-
-
-def _pa_arr(vals, typ):
-    """pa.array with a lone-surrogate fallback: the reference's
-    byte-granular entity decoder can emit strings that are not valid
-    Unicode (bug-for-bug surrogate chop, entities.py); Arrow rejects
-    them with UnicodeEncodeError, which would kill the whole task for
-    one pathological document. The happy path pays nothing; on
-    failure each offending string degrades to U+FFFD replacement
-    (the only representable form in parquet/Arrow anyway).
-    """
-    import pyarrow as pa
-
-    def fix(v):
-        if isinstance(v, str):
-            try:
-                v.encode("utf-8")
-                return v
-            except UnicodeEncodeError:
-                return (v.encode("utf-16", "surrogatepass")
-                        .decode("utf-16", "replace"))
-        if isinstance(v, list):
-            return [fix(x) for x in v]
-        if isinstance(v, dict):
-            return {fix(k): fix(x) for k, x in v.items()}
-        return v
-
-    try:
-        return pa.array(vals, typ)
-    except UnicodeEncodeError:
-        return pa.array([fix(v) for v in vals], typ)
-
-
-def _fanout_arrow(df: DataFrame, text_col: str, schema: T.StructType,
-                  per_turn) -> DataFrame:
-    """Generic per-turn fan-out operator: ``per_turn(doc)`` yields one
-    tuple per output row holding the columns after (conv_id,
-    turn_idx). One Arrow stage, shuffle-free, RecordBatches out."""
-    names = schema.fieldNames()
-    val_fields = [(f.name, _to_arrow_type(f.dataType))
-                  for f in schema.fields[2:]]
-
-    def run(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            a_conv = cols["conv_id"].append
-            a_turn = cols["turn_idx"].append
-            appends = [cols[n].append for n, _ in val_fields]
-            for conv_id, turn_idx, doc in zip(
-                rb.column("conv_id").to_pylist(),
-                rb.column("turn_idx").to_pylist(),
-                rb.column(text_col).to_pylist(),
-            ):
-                doc = doc if isinstance(doc, str) else ""
-                for tup in per_turn(doc):
-                    a_conv(conv_id)
-                    a_turn(turn_idx)
-                    for ap, v in zip(appends, tup):
-                        ap(v)
-            if cols["conv_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols["conv_id"], pa.string()),
-                     pa.array(cols["turn_idx"], pa.int32())]
-                    + [_pa_arr(cols[n], typ) for n, typ in val_fields],
-                    names=names)
-
-    return df.select(F.col("conv_id").cast("string"),
-                     F.col("turn_idx").cast("int"),
-                     text_col).mapInArrow(run, schema)
 
 EXTRACT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -274,7 +183,7 @@ EVENT_FIELDS = tuple(
     if f not in ("conv_id", "turn_idx", "seq"))
 
 
-_ARROW_TYPES = {f.name: _to_arrow_type(f.dataType)
+_ARROW_TYPES = {f.name: to_arrow_type(f.dataType)
                 for f in EVENTS_SCHEMA}
 
 
@@ -502,7 +411,7 @@ def head_headers(df: DataFrame, cfg: ParserConfig = _HEAD_CFG,
                 assemble.head_headers(doc, rows, cfg)):
             yield i, name, value
 
-    return _fanout_arrow(df, text_col, HEADERS_SCHEMA, per_turn)
+    return arrow_map(df, KEY_COLS, text_col, HEADERS_SCHEMA, per_turn)
 
 
 LINKS_SCHEMA = T.StructType([
@@ -523,7 +432,7 @@ def links(df: DataFrame, cfg: ParserConfig = ParserConfig(),
         return assemble.extract_links(doc, tokenize(doc, cfg), cfg,
                                       base)
 
-    return _fanout_arrow(df, text_col, LINKS_SCHEMA, per_turn)
+    return arrow_map(df, KEY_COLS, text_col, LINKS_SCHEMA, per_turn)
 
 
 ANCHORS_SCHEMA = T.StructType([
@@ -542,7 +451,7 @@ def anchors(df: DataFrame, cfg: ParserConfig = ParserConfig(),
     def per_turn(doc):
         return assemble.anchors(doc, tokenize(doc, cfg), cfg)
 
-    return _fanout_arrow(df, text_col, ANCHORS_SCHEMA, per_turn)
+    return arrow_map(df, KEY_COLS, text_col, ANCHORS_SCHEMA, per_turn)
 
 
 PHRASE_SCHEMA = T.StructType([
@@ -566,7 +475,7 @@ def phrase_text(df: DataFrame, cfg: ParserConfig = ParserConfig(),
         yield (assemble.get_phrase(doc, tokenize(doc, cfg), cfg,
                                    textify)[0],)
 
-    return _fanout_arrow(df, text_col, PHRASE_SCHEMA, per_turn)
+    return arrow_map(df, KEY_COLS, text_col, PHRASE_SCHEMA, per_turn)
 
 
 REWRITE_SCHEMA = T.StructType([
@@ -577,8 +486,8 @@ REWRITE_SCHEMA = T.StructType([
 
 
 def _per_turn_doc(df: DataFrame, fn, text_col: str) -> DataFrame:
-    return _fanout_arrow(df, text_col, REWRITE_SCHEMA,
-                         lambda doc: ((fn(doc),),))
+    return arrow_map(df, KEY_COLS, text_col, REWRITE_SCHEMA,
+                     lambda doc: ((fn(doc),),))
 
 
 def rewrite_links(df: DataFrame, rewrite,

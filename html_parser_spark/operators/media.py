@@ -1,5 +1,5 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed
-metadata, processed through Arrow-batched ``mapInPandas``.
+metadata, processed through the ``arrow_map`` Arrow boundary.
 
 The metadata decode is REAL: :func:`decode_image_meta` parses actual
 PNG / JPEG / GIF container headers byte-by-byte (signature sniff +
@@ -12,8 +12,8 @@ inflate -> full scanline un-filtering, pure stdlib) and baseline-DCT
 JPEG (marker walk -> canonical Huffman entropy decode -> dequant ->
 IDCT -> JFIF YCbCr->RGB, stdlib + numpy; see the JPEG section
 comment for the supported-scope line). Video decode stays a
-deployment concern (needs libav) behind the identical
-``mapInPandas`` signature — the batch iterator shape does not change.
+deployment concern (needs libav) behind the identical ``arrow_map``
+per-row signature — one payload in, rows out.
 
 ``synth_image_payloads`` builds deterministic fixture blobs with
 genuine headers (the driver oracle recomputes the embedded
@@ -24,12 +24,13 @@ bytes, not against itself).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from html_parser_spark.arrowmap import (
+    PAYLOAD_SCHEMA, arrow_map, synth_payloads)
 
 MEDIA_META_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -142,38 +143,27 @@ def synth_image_payloads(df: DataFrame, key_col: str = "doc_id",
     16 + (doc_id*13) % 464, body = the document text bytes.
     Closed-form, so a SQL oracle can predict every parsed field."""
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
+    def build(v):
+        k = v["k"]
+        w = 16 + (k * 7) % 624
+        h = 16 + (k * 13) % 464
+        if k % 5 == 3:
+            head = _webp_header(w, h, (k // 5) % 3)
+        elif k % 5 == 4:
+            head = _tiff_header(w, h, big_endian=(k // 5) % 2 == 1)
+        elif k % 5 == 1:
+            # JPEGs carry a real APP1/Exif orientation tag (rotating
+            # all 8 values and both TIFF byte orders) — the rotation
+            # metadata a curation pipeline must respect before
+            # training
+            head = _jpeg_header(w, h, orientation=1 + k % 8)
+        else:
+            head = _HEADERS[k % 5][0](w, h)
+        yield (head + v["t"].encode(),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for key, text in zip(pdf[key_col], pdf[text_col]):
-                k = int(key)
-                w = 16 + (k * 7) % 624
-                h = 16 + (k * 13) % 464
-                if k % 5 == 3:
-                    head = _webp_header(w, h, (k // 5) % 3)
-                elif k % 5 == 4:
-                    head = _tiff_header(w, h,
-                                        big_endian=(k // 5) % 2 == 1)
-                elif k % 5 == 1:
-                    # JPEGs carry a real APP1/Exif orientation tag
-                    # (rotating all 8 values and both TIFF byte
-                    # orders) — the rotation metadata a curation
-                    # pipeline must respect before training
-                    head = _jpeg_header(w, h,
-                                        orientation=1 + k % 8)
-                else:
-                    head = _HEADERS[k % 5][0](w, h)
-                body = (text if isinstance(text, str) else "").encode()
-                payloads.append(head + body)
-            yield pd.DataFrame({"doc_id": pdf[key_col],
-                                "payload": payloads})
-
-    return df.select(key_col, text_col).mapInPandas(run, schema)
+    doc = F.struct(F.col(key_col).cast("long").alias("k"),
+                   F.coalesce(F.col(text_col), F.lit("")).alias("t"))
+    return arrow_map(df, [key_col], doc, PAYLOAD_SCHEMA, build)
 
 
 def parse_image_header(payload: bytes) -> tuple[str, int | None,
@@ -339,30 +329,12 @@ def decode_image_meta(df: DataFrame, key_col: str = "doc_id",
     a batch of decoded frames fits in worker memory.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL payloads are first-class rows (optional media
-            # field, outer join): empty-bytes semantics, never a
-            # worker TypeError
-            payloads = [bytes(p) if p is not None else b""
-                        for p in pdf[payload_col]]
-            metas = [parse_image_header(p) for p in payloads]
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "n_bytes": [len(p) for p in payloads],
-                "format": [m[0] for m in metas],
-                "width": pd.array([m[1] for m in metas],
-                                  dtype="Int64"),
-                "height": pd.array([m[2] for m in metas],
-                                   dtype="Int64"),
-                "orientation": pd.array(
-                    [parse_jpeg_orientation(p) if m[0] == "jpeg"
-                     else None for p, m in zip(payloads, metas)],
-                    dtype="Int64"),
-            })
+    def meta(p):
+        fmt, w, h = parse_image_header(p)
+        orient = parse_jpeg_orientation(p) if fmt == "jpeg" else None
+        yield len(p), fmt, w, h, orient
 
-    return df.select(key_col, payload_col).mapInPandas(
-        run, MEDIA_META_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, MEDIA_META_SCHEMA, meta)
 
 
 # ------------------------------------------------------- pixel decode
@@ -476,20 +448,7 @@ def synth_png_images(df: DataFrame, key_col: str = "doc_id") -> DataFrame:
     """Deterministic fully-decodable PNG fixture blobs (see
     :func:`_synth_png_full`) — a SQL oracle can predict every decoded
     channel sum in closed form."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [_synth_png_full(int(k))
-                            for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(df, key_col, _synth_png_full)
 
 
 def _png_unfilter(raw: bytes, w: int, h: int,
@@ -780,20 +739,7 @@ def synth_gif_images(df: DataFrame, key_col: str = "doc_id") -> DataFrame:
     """Deterministic fully-decodable GIF fixture blobs (see
     :func:`_synth_gif_full`) — a SQL oracle can predict every decoded
     channel sum in closed form."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [_synth_gif_full(int(k))
-                            for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(df, key_col, _synth_gif_full)
 
 
 def decode_gif_pixels(payload: bytes) -> tuple:
@@ -1105,20 +1051,7 @@ def synth_jpeg_images(df: DataFrame,
                       key_col: str = "doc_id") -> DataFrame:
     """Deterministic fully-decodable baseline-JPEG fixture blobs
     (see :func:`_synth_jpeg_full`)."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [_synth_jpeg_full(int(k))
-                            for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(df, key_col, _synth_jpeg_full)
 
 
 _SOF_UNSUPPORTED = frozenset(
@@ -1365,30 +1298,15 @@ def decode_image_pixels(df: DataFrame, key_col: str = "doc_id",
     decoded frames fits worker memory (video decode plugs in behind
     the same signature with a codec library)."""
 
-    def dispatch(p) -> tuple:
-        if p is None:
-            return (None,) * 5
-        b = bytes(p)
+    def dispatch(b):
         if b[:2] == b"\xff\xd8":
-            return decode_jpeg_pixels(b)
-        if b[:6] in (b"GIF87a", b"GIF89a"):
-            return decode_gif_pixels(b)
-        return decode_png_pixels(b)
+            yield decode_jpeg_pixels(b)
+        elif b[:6] in (b"GIF87a", b"GIF89a"):
+            yield decode_gif_pixels(b)
+        else:
+            yield decode_png_pixels(b)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = [dispatch(p) for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "width": pd.array([r[0] for r in res], dtype="Int64"),
-                "height": pd.array([r[1] for r in res], dtype="Int64"),
-                "r_sum": pd.array([r[2] for r in res], dtype="Int64"),
-                "g_sum": pd.array([r[3] for r in res], dtype="Int64"),
-                "b_sum": pd.array([r[4] for r in res], dtype="Int64"),
-            })
-
-    return df.select(key_col, payload_col).mapInPandas(
-        run, PIXELS_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, PIXELS_SCHEMA, dispatch)
 
 
 FRAME_SCHEMA = T.StructType([
@@ -1406,19 +1324,8 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 64,
     a real build emits decoded frame tensors with the same shape."""
     import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, hashes = [], [], []
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
-                if payload is None:  # no payload -> no frames
-                    continue
-                for i, off in enumerate(
-                        range(0, len(payload), every_n_bytes)):
-                    ids.append(key)
-                    idxs.append(i)
-                    hashes.append(hashlib.md5(
-                        payload[off:off + every_n_bytes]).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_hash": hashes})
+    def frames(p):
+        for i, off in enumerate(range(0, len(p), every_n_bytes)):
+            yield i, hashlib.md5(p[off:off + every_n_bytes]).hexdigest()
 
-    return df.select(key_col, payload_col).mapInPandas(run, FRAME_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, FRAME_SCHEMA, frames)

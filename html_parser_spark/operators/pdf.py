@@ -1,6 +1,6 @@
 """PDF text extraction: the north rule's "PDF/layout parse" tier —
 a pure-stdlib PDF parser over opaque ``binary`` payloads, run through
-the same Arrow-batched ``mapInPandas`` plumbing as the image decode.
+the same ``arrow_map`` Arrow boundary as the image decode.
 
 What is REAL here (all from the public PDF 1.7 spec, ISO 32000-1):
 
@@ -54,11 +54,11 @@ from __future__ import annotations
 import re
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from html_parser_spark.arrowmap import arrow_map, synth_payloads
 
 PDF_TEXT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -805,19 +805,7 @@ def _synth_pdf(doc_id: int) -> bytes:
 def synth_pdf_payloads(df: DataFrame,
                        key_col: str = "doc_id") -> DataFrame:
     """(doc_id, payload binary) of deterministic complete PDFs."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [_synth_pdf(int(k)) for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(df, key_col, _synth_pdf)
 
 
 # ------------------------------------------------------------- parsing
@@ -1274,17 +1262,5 @@ def extract_pdf_text(df: DataFrame, key_col: str = "doc_id",
     """binary PDF payloads -> (doc_id, n_pages, pdf_text) via
     Arrow-batched UDF: one pass per batch, no shuffle — the same
     scale shape as the image metadata/pixel decodes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = [extract_pdf_text_bytes(bytes(p))
-                   if p is not None else (0, "")
-                   for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "n_pages": [r[0] for r in res],
-                "pdf_text": [r[1] for r in res],
-            })
-
-    return df.select(key_col, payload_col).mapInPandas(
-        run, PDF_TEXT_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, PDF_TEXT_SCHEMA,
+                     lambda p: (extract_pdf_text_bytes(p),))

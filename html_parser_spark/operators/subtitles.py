@@ -17,11 +17,12 @@ standard text-operator scale shape.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from html_parser_spark.arrowmap import arrow_map
 
 __all__ = ["parse_subtitles", "subtitle_cues", "synth_subtitles"]
 
@@ -81,15 +82,8 @@ def synth_subtitles(df: DataFrame,
         T.StructField("sub_text", T.StringType()),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "sub_text": [_synth_subtitle_text(int(k))
-                             for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return arrow_map(df, [key_col], F.col(key_col).cast("long"), schema,
+                     lambda d: ((_synth_subtitle_text(d),),))
 
 
 def parse_subtitles(text: str) -> list[tuple[str, int, int, str]]:
@@ -154,18 +148,8 @@ def subtitle_cues(df: DataFrame, key_col: str = "doc_id",
                   text_col: str = "sub_text") -> DataFrame:
     """subtitle documents -> one row per cue. One Arrow map stage,
     no shuffle; files that parse to nothing contribute no rows."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k, t in zip(pdf[key_col], pdf[text_col]):
-                if not isinstance(t, str):
-                    continue
-                for idx, (fmt, s, e, txt) in enumerate(
-                        parse_subtitles(t)):
-                    rows.append((int(k), fmt, idx, s, e, txt))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in _CUES_SCHEMA])
+    def cues(text):
+        for idx, (fmt, s, e, txt) in enumerate(parse_subtitles(text)):
+            yield fmt, idx, s, e, txt
 
-    return df.select(key_col, text_col).mapInPandas(
-        run, _CUES_SCHEMA)
+    return arrow_map(df, [key_col], text_col, _CUES_SCHEMA, cues)

@@ -29,10 +29,10 @@ from __future__ import annotations
 import struct
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from html_parser_spark.arrowmap import arrow_map, synth_payloads
 from html_parser_spark.operators.media import (
     _encode_jpeg, decode_jpeg_pixels)
 
@@ -281,20 +281,8 @@ def synth_mp4_videos(df: DataFrame, key_col: str = "doc_id",
     :func:`_synth_fmp4` layout when ``fragmented``) — a SQL oracle
     can predict every sampled frame's decoded channel sums in
     closed form."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-    build = _synth_fmp4 if fragmented else _synth_mp4_full
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [build(int(k)) for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(
+        df, key_col, _synth_fmp4 if fragmented else _synth_mp4_full)
 
 
 # ------------------------------------------------------- parse side
@@ -663,30 +651,20 @@ def sample_video_frames(df: DataFrame, every_n: int = 2,
     if every_n < 1:
         raise ValueError(f"every_n ({every_n}) must be >= 1")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k, p in zip(pdf[key_col], pdf[payload_col]):
-                buf = bytes(p)  # materialize ONCE per file, not
-                meta = parse_mp4(buf)  # once per sampled frame
-                if meta is None:
-                    continue
-                ts = meta["timescale"] or 1
-                dur_ms = meta["duration"] * 1000 // ts
-                for f in range(0, meta["n_samples"], every_n):
-                    off, sz = meta["offsets"][f], meta["sizes"][f]
-                    w, h, r, g, b = decode_jpeg_pixels(
-                        buf[off:off + sz])
-                    if w is None:
-                        continue
-                    rows.append((int(k), f, w, h, r, g, b, dur_ms,
-                                 meta["n_samples"], meta["codec"]))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in _FRAME_SCHEMA])
+    def frames(buf):
+        meta = parse_mp4(buf)
+        if meta is None:
+            return
+        ts = meta["timescale"] or 1
+        dur_ms = meta["duration"] * 1000 // ts
+        for f in range(0, meta["n_samples"], every_n):
+            off, sz = meta["offsets"][f], meta["sizes"][f]
+            w, h, r, g, b = decode_jpeg_pixels(buf[off:off + sz])
+            if w is not None:
+                yield (f, w, h, r, g, b, dur_ms, meta["n_samples"],
+                       meta["codec"])
 
-    return df.select(key_col, payload_col).mapInPandas(
-        run, _FRAME_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, _FRAME_SCHEMA, frames)
 
 
 _CAPTION_SCHEMA = T.StructType([
@@ -711,48 +689,38 @@ def extract_video_captions(df: DataFrame,
     same quality/lang/dedup funnel as any document column. One Arrow
     map stage, no shuffle; tracks or samples that don't parse yield
     no rows (never a crash)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k, p in zip(pdf[key_col], pdf[payload_col]):
-                b = bytes(p)
-                try:
-                    movie = _parse_tracks(b)
-                except Exception:
-                    movie = None
-                if movie is None:
-                    continue
-                tk = next((t for t in movie["tracks"]
-                           if t.get("handler") in _TEXT_HANDLERS),
-                          None)
-                if tk is None:
-                    continue
-                ts = tk.get("media_timescale") or 1
-                starts, durs = tk["starts"], tk["durations"]
-                for i, (off, sz) in enumerate(
-                        zip(tk["offsets"], tk["sizes"])):
-                    if sz < 2 or off + sz > len(b):
-                        continue
-                    tlen = struct.unpack(">H", b[off:off + 2])[0]
-                    if tlen > sz - 2:
-                        continue
-                    try:
-                        txt = b[off + 2:off + 2 + tlen] \
-                            .decode("utf-8")
-                    except UnicodeDecodeError:
-                        continue
-                    if i < len(starts):
-                        s_ms = starts[i] * 1000 // ts
-                        e_ms = (starts[i] + durs[i]) * 1000 // ts
-                    else:  # no stts coverage: position unknown
-                        s_ms = e_ms = 0
-                    rows.append((int(k), i, s_ms, e_ms, txt))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in _CAPTION_SCHEMA])
+    def captions(b):
+        try:
+            movie = _parse_tracks(b)
+        except Exception:
+            return
+        if movie is None:
+            return
+        tk = next((t for t in movie["tracks"]
+                   if t.get("handler") in _TEXT_HANDLERS), None)
+        if tk is None:
+            return
+        ts = tk.get("media_timescale") or 1
+        starts, durs = tk["starts"], tk["durations"]
+        for i, (off, sz) in enumerate(zip(tk["offsets"], tk["sizes"])):
+            if sz < 2 or off + sz > len(b):
+                continue
+            tlen = struct.unpack(">H", b[off:off + 2])[0]
+            if tlen > sz - 2:
+                continue
+            try:
+                txt = b[off + 2:off + 2 + tlen].decode("utf-8")
+            except UnicodeDecodeError:
+                continue
+            if i < len(starts):
+                s_ms = starts[i] * 1000 // ts
+                e_ms = (starts[i] + durs[i]) * 1000 // ts
+            else:  # no stts coverage: position unknown
+                s_ms = e_ms = 0
+            yield i, s_ms, e_ms, txt
 
-    return df.select(key_col, payload_col).mapInPandas(
-        run, _CAPTION_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, _CAPTION_SCHEMA,
+                     captions)
 
 
 _META_SCHEMA = T.StructType([
@@ -772,20 +740,12 @@ def video_meta(df: DataFrame, key_col: str = "doc_id",
     the box walk ALONE — no frame bytes are touched, so cataloging a
     100 TB video corpus costs a few KB of moov per file, not a
     decode. One Arrow map stage, no shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k, p in zip(pdf[key_col], pdf[payload_col]):
-                meta = parse_mp4(bytes(p))
-                if meta is None:
-                    continue
-                ts = meta["timescale"] or 1
-                rows.append((int(k), meta["width"], meta["height"],
-                             meta["duration"] * 1000 // ts,
-                             meta["n_samples"], meta["codec"]))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in _META_SCHEMA])
+    def meta_row(p):
+        meta = parse_mp4(p)
+        if meta is not None:
+            ts = meta["timescale"] or 1
+            yield (meta["width"], meta["height"],
+                   meta["duration"] * 1000 // ts, meta["n_samples"],
+                   meta["codec"])
 
-    return df.select(key_col, payload_col).mapInPandas(
-        run, _META_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, _META_SCHEMA, meta_row)

@@ -19,13 +19,12 @@ I/O), so a 1000-executor cluster streams members per-partition.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from html_parser_spark.arrowmap import arrow_map, synth_payloads
 from html_parser_spark.sources.warc import _gunzip_members
 
 __all__ = ["parse_tar", "synth_tar_shards", "tar_members",
@@ -88,20 +87,7 @@ def synth_tar_shards(df: DataFrame,
                      key_col: str = "doc_id") -> DataFrame:
     """Deterministic WebDataset-style tar shard blobs (see
     :func:`_synth_tar`)."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [_synth_tar(int(k))
-                            for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(df, key_col, _synth_tar)
 
 
 # ------------------------------------------------------- parse side
@@ -181,6 +167,23 @@ _MEMBERS_SCHEMA = T.StructType([
 ])
 
 
+def _member_rows(members: list[tuple[str, bytes]]):
+    """(name, data) members of one shard -> member rows after doc_id:
+    (member_idx, name, stem, ext, n_bytes, body, body_text). The stem
+    is the basename up to its first dot with the directory path kept;
+    body_text is the UTF-8 decode, or None for non-UTF-8 bytes."""
+    for i, (name, data) in enumerate(members):
+        d, _, b = name.rpartition("/")
+        dot = b.find(".")
+        stem = (d + "/" if d else "") + (b[:dot] if dot > 0 else b)
+        ext = b[dot + 1:] if dot > 0 else ""
+        try:
+            txt = data.decode("utf-8")
+        except UnicodeDecodeError:
+            txt = None
+        yield i, name, stem, ext, len(data), data, txt
+
+
 def tar_members(df: DataFrame, key_col: str = "doc_id",
                 payload_col: str = "payload") -> DataFrame:
     """binary tar shards -> one row per regular member, with the
@@ -193,30 +196,8 @@ def tar_members(df: DataFrame, key_col: str = "doc_id",
     stage, no shuffle; at 100 TB select AWAY the body column in
     metadata-only queries so column pruning keeps the bytes on
     disk."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k, p in zip(pdf[key_col], pdf[payload_col]):
-                for i, (name, data) in enumerate(
-                        parse_tar(bytes(p))):
-                    base = name.rsplit("/", 1)
-                    d, b = (base if len(base) == 2 else ("", name))
-                    dot = b.find(".")
-                    stem = (d + "/" if d else "") \
-                        + (b[:dot] if dot > 0 else b)
-                    ext = b[dot + 1:] if dot > 0 else ""
-                    try:
-                        txt = data.decode("utf-8")
-                    except UnicodeDecodeError:
-                        txt = None
-                    rows.append((int(k), i, name, stem, ext,
-                                 len(data), data, txt))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in _MEMBERS_SCHEMA])
-
-    return df.select(key_col, payload_col).mapInPandas(
-        run, _MEMBERS_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, _MEMBERS_SCHEMA,
+                     lambda p: _member_rows(parse_tar(p)))
 
 
 def webdataset_samples(members: DataFrame) -> DataFrame:
@@ -351,20 +332,7 @@ def _synth_zip(doc_id: int) -> bytes:
 def synth_zip_shards(df: DataFrame,
                      key_col: str = "doc_id") -> DataFrame:
     """Deterministic zip shard blobs (see :func:`_synth_zip`)."""
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[key_col],
-                "payload": [_synth_zip(int(k))
-                            for k in pdf[key_col]],
-            })
-
-    return df.select(key_col).mapInPandas(run, schema)
+    return synth_payloads(df, key_col, _synth_zip)
 
 
 def zip_members(df: DataFrame, key_col: str = "doc_id",
@@ -373,27 +341,5 @@ def zip_members(df: DataFrame, key_col: str = "doc_id",
     :func:`tar_members` (stem/ext split, raw body + text decode), so
     downstream WebDataset grouping and media routing are
     container-agnostic."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k, p in zip(pdf[key_col], pdf[payload_col]):
-                for i, (name, data) in enumerate(
-                        parse_zip(bytes(p))):
-                    base = name.rsplit("/", 1)
-                    d, b = (base if len(base) == 2 else ("", name))
-                    dot = b.find(".")
-                    stem = (d + "/" if d else "") \
-                        + (b[:dot] if dot > 0 else b)
-                    ext = b[dot + 1:] if dot > 0 else ""
-                    try:
-                        txt = data.decode("utf-8")
-                    except UnicodeDecodeError:
-                        txt = None
-                    rows.append((int(k), i, name, stem, ext,
-                                 len(data), data, txt))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in _MEMBERS_SCHEMA])
-
-    return df.select(key_col, payload_col).mapInPandas(
-        run, _MEMBERS_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, _MEMBERS_SCHEMA,
+                     lambda p: _member_rows(parse_zip(p)))

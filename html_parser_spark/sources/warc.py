@@ -28,11 +28,12 @@ from __future__ import annotations
 
 import gzip
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from html_parser_spark.arrowmap import arrow_map
 
 __all__ = ["synth_warc", "parse_warc", "warc_records"]
 
@@ -98,17 +99,10 @@ def synth_warc(df: DataFrame, key_col: str = "conv_id",
         T.StructField("payload", T.BinaryType()),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for key, text in zip(pdf[key_col], pdf[text_col]):
-                d = int(key)
-                ids.append(d)
-                payloads.append(_synth_warc_bytes(
-                    d, text if isinstance(text, str) else ""))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return df.select(key_col, text_col).mapInPandas(run, schema)
+    doc = F.struct(F.col(key_col).cast("long").alias("d"),
+                   F.coalesce(F.col(text_col), F.lit("")).alias("t"))
+    return arrow_map(df, [key_col], doc, schema,
+                     lambda v: ((_synth_warc_bytes(v["d"], v["t"]),),))
 
 
 # ------------------------------------------------------- parse side
@@ -223,25 +217,14 @@ def warc_records(df: DataFrame, key_col: str = "doc_id",
     records carry their raw body. One Arrow map stage, no shuffle;
     body text decodes utf-8 with replacement (a crawl is never
     uniformly valid)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for k, p in zip(pdf[key_col], pdf[payload_col]):
-                for idx, (heads, body) in enumerate(
-                        parse_warc(bytes(p))):
-                    status, ctype = None, heads.get("content-type")
-                    if ctype and ctype.startswith("application/http"):
-                        status, http_ctype, body = split_http(body)
-                        ctype = http_ctype
-                    rows.append((
-                        int(k), idx,
-                        heads.get("warc-type", ""),
-                        heads.get("warc-target-uri"),
-                        status, ctype, len(body),
-                        body.decode("utf-8", "replace")))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in _RECORDS_SCHEMA])
+    def records(payload):
+        for idx, (heads, body) in enumerate(parse_warc(payload)):
+            status, ctype = None, heads.get("content-type")
+            if ctype and ctype.startswith("application/http"):
+                status, ctype, body = split_http(body)
+            yield (idx, heads.get("warc-type", ""),
+                   heads.get("warc-target-uri"), status, ctype,
+                   len(body), body.decode("utf-8", "replace"))
 
-    return df.select(key_col, payload_col).mapInPandas(
-        run, _RECORDS_SCHEMA)
+    return arrow_map(df, [key_col], payload_col, _RECORDS_SCHEMA,
+                     records)

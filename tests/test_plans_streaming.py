@@ -4,6 +4,9 @@ rollup, and the encoding-sniff operator."""
 
 from __future__ import annotations
 
+import importlib
+
+import pytest
 from pyspark.sql import functions as F
 
 from html_parser_spark.config import EXTRACT_CONFIG
@@ -484,6 +487,72 @@ def test_content_and_pdf_plans_shuffle_free(spark):
     docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     assert "Exchange" not in _plan(
         extract_pdf_text(synth_pdf_payloads(docs)))
+
+
+_TURNS = ("conv_id string, turn_idx int, text string",
+          [("1", 0, "<p>x <a href='u'>y</a></p>")])
+_DOCS = ("doc_id long, text string", [(1, "x")])
+_BLOBS = ("doc_id long, payload binary", [(1, b"x")])
+
+#: every per-row operator: (module, operator, input frame, kwargs)
+_PER_ROW_OPS = [
+    ("operators.extract", "head_headers", _TURNS, {}),
+    ("operators.extract", "links", _TURNS, {}),
+    ("operators.extract", "anchors", _TURNS, {}),
+    ("operators.extract", "phrase_text", _TURNS, {}),
+    ("operators.extract", "rewrite_links", _TURNS,
+     {"rewrite": lambda tag, attr, url: url}),
+    ("operators.extract", "strip_markup", _TURNS, {}),
+    ("operators.content", "content_blocks", _TURNS, {}),
+    ("operators.content", "main_content", _TURNS, {}),
+    ("operators.content", "extract_tables", _TURNS, {}),
+    ("sources.warc", "synth_warc", _DOCS, {"key_col": "doc_id"}),
+    ("sources.warc", "warc_records", _BLOBS, {}),
+    ("sources.tarshard", "synth_tar_shards", _DOCS, {}),
+    ("sources.tarshard", "tar_members", _BLOBS, {}),
+    ("sources.tarshard", "synth_zip_shards", _DOCS, {}),
+    ("sources.tarshard", "zip_members", _BLOBS, {}),
+    ("operators.pdf", "synth_pdf_payloads", _DOCS, {}),
+    ("operators.pdf", "extract_pdf_text", _BLOBS, {}),
+    ("operators.media", "synth_image_payloads", _DOCS, {}),
+    ("operators.media", "decode_image_meta", _BLOBS, {}),
+    ("operators.media", "synth_png_images", _DOCS, {}),
+    ("operators.media", "synth_gif_images", _DOCS, {}),
+    ("operators.media", "synth_jpeg_images", _DOCS, {}),
+    ("operators.media", "decode_image_pixels", _BLOBS, {}),
+    ("operators.media", "sample_frames", _BLOBS, {}),
+    ("operators.audio", "synth_wav_audio", _DOCS, {}),
+    ("operators.audio", "decode_wav_stats", _BLOBS, {}),
+    ("operators.audio", "synth_mp3_audio", _DOCS, {}),
+    ("operators.audio", "decode_mp3_meta", _BLOBS, {}),
+    ("operators.audio", "synth_flac_audio", _DOCS, {}),
+    ("operators.audio", "decode_flac_meta", _BLOBS, {}),
+    ("operators.video", "synth_mp4_videos", _DOCS, {}),
+    ("operators.video", "sample_video_frames", _BLOBS, {}),
+    ("operators.video", "extract_video_captions", _BLOBS, {}),
+    ("operators.video", "video_meta", _BLOBS, {}),
+    ("operators.subtitles", "synth_subtitles", _DOCS, {}),
+    ("operators.subtitles", "subtitle_cues", _DOCS,
+     {"text_col": "text"}),
+]
+
+
+@pytest.mark.parametrize(
+    "module,op,frame,kwargs", _PER_ROW_OPS,
+    ids=[f"{m}.{o}" for m, o, _, _ in _PER_ROW_OPS])
+def test_per_row_operators_use_arrow_map(spark, module, op, frame,
+                                         kwargs):
+    """Every per-row operator runs through ``arrowmap.arrow_map``:
+    one MapInArrow stage, no MapInPandas, no Exchange."""
+    fn = getattr(importlib.import_module(f"html_parser_spark.{module}"),
+                 op)
+    schema, rows = frame
+    df = fn(spark.createDataFrame(rows, schema), **kwargs)
+    plan = _plan(df)
+    assert "MapInArrow" in plan, plan
+    assert "MapInPandas" not in plan, plan
+    assert "Exchange" not in plan, plan
+    df.collect()
 
 
 def test_new_source_plans_shuffle_free(spark):
