@@ -9,11 +9,13 @@ Scale notes (the whole point of these designs):
 * **minhash_signatures** — explode distinct shingles (narrow), then a
   single groupBy(doc) computing all K min-hashes at once. One shuffle
   keyed by doc id; K is a column count, not a job count.
-* **lsh_candidate_pairs** — group signature bands; only buckets with
-  >1 member produce pairs, so the candidate join is output-bounded
-  (the classic MinHash-LSH trick: no O(n²) compare). A hot bucket
-  (degenerate band) would explode quadratically — ``max_bucket`` caps
-  it, the standard guard at corpus scale.
+* **lsh_candidate_pairs** — one aggregation collects each signature
+  band's bucket as a sorted id list; only buckets with >1 member emit
+  their within-bucket pairs, so candidate generation is
+  output-bounded (the classic MinHash-LSH trick: no O(n²) compare)
+  and needs no join. A hot bucket (degenerate band) would explode
+  quadratically — ``max_bucket`` caps it, the standard guard at
+  corpus scale.
 * **simhash** — md5-derived 64-bit signature entirely in JVM
   expressions; near-dup = signatures at small Hamming distance,
   found via exact-match on four 16-bit bands (65,536 bucket values
@@ -142,30 +144,29 @@ def lsh_candidate_pairs(sigs: DataFrame, key_col: str = "doc_id",
                         max_bucket: int = 1000) -> DataFrame:
     """MinHash-LSH: docs sharing any (band_idx, band_key) bucket.
 
-    Returns distinct (id_a, id_b) with id_a < id_b. ``max_bucket``
-    drops degenerate buckets (e.g. empty-text docs all hashing alike)
-    before the quadratic self-join.
+    Returns distinct (id_a, id_b) with id_a < id_b. One groupBy
+    collects each bucket's sorted keys; ``max_bucket`` drops
+    degenerate buckets (e.g. empty-text docs all hashing alike)
+    before their quadratic pair expansion. Each member then pairs
+    with the members sorted after it, so a generated row holds one
+    id list, never a bucket's whole pair set. The band rows (and the
+    signatures under them) are computed once: no join reads them
+    again. Exchanges: the aggregation and the final ``distinct``.
     """
-    exploded = lsh_band_rows(sigs, key_col=key_col,
+    buckets = (lsh_band_rows(sigs, key_col=key_col,
                              num_hashes=num_hashes,
                              band_size=band_size)
-    counts = (exploded.groupBy("band_idx", "band_key")
-              .agg(F.count("*").alias("n"))
-              .filter((F.col("n") > 1) & (F.col("n") <= max_bucket)))
-    # no broadcast hint: the surviving-buckets table is corpus-derived
-    # (O(duplicated docs x bands) rows at web scale) — forcing it
-    # through the driver would hit the broadcast limit exactly when
-    # dedup matters most; AQE broadcasts it at runtime when it IS
-    # small (same rule ngram_jaccard_pairs documents)
-    kept = exploded.join(counts.select("band_idx", "band_key"),
-                         ["band_idx", "band_key"])
-    a = kept.alias("a")
-    b = kept.alias("b")
+               .groupBy("band_idx", "band_key")
+               # n, not size(ids): collect_list skips NULL keys, which
+               # pair with nothing but still count toward max_bucket
+               .agg(F.count("*").alias("n"),
+                    F.array_sort(F.collect_list("key")).alias("ids"))
+               .filter((F.col("n") > 1) & (F.col("n") <= max_bucket)))
     return (
-        a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.band_key") == F.col("b.band_key"))
-               & (F.col("a.key") < F.col("b.key")))
-        .select(F.col("a.key").alias("id_a"), F.col("b.key").alias("id_b"))
+        buckets.select("ids", F.posexplode("ids").alias("i", "id_a"))
+        .select("id_a", F.explode(F.slice("ids", F.col("i") + 2,
+                                          F.size("ids"))).alias("id_b"))
+        .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
     )
 
@@ -202,8 +203,8 @@ def mirror_pairs(sigs: DataFrame, key_col: str = "host",
 
     Feed it :func:`minhash_union` output (or
     :func:`minhash_signatures` keyed directly on the group column).
-    Scale shape: candidates come from the bucketed LSH join (never a
-    cross-product of groups), and scoring joins the O(groups)
+    Scale shape: candidates come from the bucketed LSH aggregation
+    (never a cross-product of groups), and scoring joins the O(groups)
     signature table twice on its key. ``est_jaccard`` is k/num_hashes
     for integer k — exactly representable, so the score is
     bit-identical in any engine.
@@ -220,7 +221,7 @@ def mirror_pairs(sigs: DataFrame, key_col: str = "host",
     # signatures; concat_ws would fold those to '' band keys and herd
     # every empty-corpus group into ONE degenerate bucket (their
     # agreement score is 0 anyway — NULL == NULL is NULL — so they
-    # can't reach the output, only waste the candidate join). Same
+    # can't reach the output, only waste candidate pairs). Same
     # no-similarity-evidence posture as dedup_incremental.
     sigs = sigs.filter(F.col("h0").isNotNull())
     cand = lsh_candidate_pairs(sigs, key_col=key_col,

@@ -11,6 +11,11 @@ Stages (each one of the independently-oracle-verified operators):
    With ``--dedup-lines N``, a CCNet-tier duplicate-line scrub
    (`dedup.dedup_lines`) runs on the line-structured extracted text
    first, so boilerplate never reaches the quality stats.
+   The extracted table is cached, repartitioned first to one
+   partition per core when it has fewer (a one-row-group input reads
+   as one partition), so the JVM stages 2-5 run on every core. The
+   Python stages before it keep the input's partitioning: each Python
+   map node in a task holds its own worker.
 2. **quality gate** — Gopher rule bundle on the extracted text
    (`textstats.gopher_quality`): word count / mean word length /
    symbol ratio / alpha-word ratio / stopword presence.
@@ -22,7 +27,9 @@ Stages (each one of the independently-oracle-verified operators):
    (verified: the funnel runs an empty corpus through every later
    stage and the write without error).
 3. **language gate** — char-trigram `lang_id`, keep a configured
-   language allowlist.
+   language allowlist. Every gate carries the text through its key
+   columns and filters its own output: a narrow stage, no join back
+   to the corpus.
    With ``--ppl-terciles T.parquet``, a CCNet perplexity gate then
    ranks survivors by hashed-n-gram LM score under the target table
    and keeps only the ``--ppl-keep`` buckets (default head,middle —
@@ -32,8 +39,9 @@ Stages (each one of the independently-oracle-verified operators):
    broadcast probe; ``--eval-table`` points at a parquet of texts,
    omitted = stage skipped; ``--decontaminate-mode scrub`` excises
    just the leaked spans instead of dropping).
-5. **near-dup removal** — MinHash signatures → LSH candidate pairs →
-   star connected components → one canonical doc per cluster
+5. **near-dup removal** — MinHash signatures → LSH candidate pairs
+   (one bucket aggregation, no self-join) → star connected
+   components → one canonical doc per cluster
    (`dedup.dedup_canonical` composition).
 6. **corpus mixing** (``--mix 'en=0.6,fr=0.4'``) — deterministic
    hash-Bernoulli sampling so language strata follow the requested
@@ -209,7 +217,13 @@ def main() -> None:
                           F.lit("2026-01-01 00:00:00")).alias("ts")))
     funnel["input_turns"] = tr.count()
 
-    # 1. extract (cache: three downstream consumers)
+    # 1. extract. Each gate below filters its own output in place,
+    # carrying the text through its key columns: (conv_id, turn_idx)
+    # is the table's key, so that equals a semi-join back to the
+    # corpus without shuffling it. --c4 also carries the
+    # line-structured extracted_text it judges.
+    keys = ["conv_id", "turn_idx"]
+    c4_cols = ["extracted_text"] if args.c4 else []
     ex0 = extract_text(tr, EXTRACT_CONFIG)
 
     # 1b. optional CCNet-tier duplicate-line scrub — runs on the
@@ -228,47 +242,49 @@ def main() -> None:
         dl = dedup.dedup_lines(keyed0, key_col="doc_key",
                                text_col="extracted_text",
                                min_count=args.dedup_lines).cache()
-        ex = (dl.join(keyed0.select("doc_key", "conv_id", "turn_idx"),
-                      "doc_key")
-              .select("conv_id", "turn_idx",
-                      F.trim(F.regexp_replace("clean_text", r"\s+",
-                                              " ")).alias("text"))
-              .cache())
         # rows survive line dedup by design — the informative funnel
-        # number is how many turns had boilerplate lines scrubbed
-        funnel["line_scrubbed_turns"] = (
-            dl.filter("n_dup_lines > 0").count())
+        # number is how many turns had boilerplate lines scrubbed.
+        # Counted before the re-join below, whose partition count is
+        # then planned over the two filled caches.
+        funnel["line_scrubbed_turns"] = dl.filter("n_dup_lines > 0").count()
+        ex = (dl.join(keyed0.select("doc_key", *keys, *c4_cols),
+                      "doc_key")
+              .select(*keys,
+                      F.trim(F.regexp_replace("clean_text", r"\s+",
+                                              " ")).alias("text"),
+                      *c4_cols))
     else:
-        ex = (ex0.select("conv_id", "turn_idx",
-                         F.col("trimmed_text").alias("text"))
-              .cache())
+        ex = ex0.select(*keys, F.col("trimmed_text").alias("text"),
+                        *c4_cols)
+    # a one-row-group input (or a small coalesced shuffle) leaves ex in
+    # fewer partitions than cores, and every narrow gate below would
+    # inherit that. Split here, after the Python stages: each Python
+    # map node in a task holds its own worker, so splitting the input
+    # would multiply workers, not just tasks.
+    n_cores = spark.sparkContext.defaultParallelism
+    if ex.rdd.getNumPartitions() < n_cores:
+        ex = ex.repartition(n_cores)
+    ex = ex.cache()
 
     # 2. quality gate on the EXTRACTED text
-    q = textstats.gopher_quality(ex, ["conv_id", "turn_idx"],
+    q = textstats.gopher_quality(ex, [*keys, "text", *c4_cols],
                                  min_words=args.min_words)
-    ok_q = q.filter("passes_gopher").select("conv_id", "turn_idx")
-    step2 = ex.join(ok_q, ["conv_id", "turn_idx"], "left_semi").cache()
+    step2 = q.filter("passes_gopher").select(*keys, "text", *c4_cols).cache()
     funnel["after_quality"] = step2.count()
 
     # 2b. optional C4 page gate — judged on the LINE-structured
     # as-extracted text (trimmed/collapsed text has no newlines for
     # the line-retention rule to see)
     if args.c4:
-        c4v = textstats.c4_quality(
-            ex0.select("conv_id", "turn_idx",
-                       F.col("extracted_text").alias("text")),
-            ["conv_id", "turn_idx"])
-        ok_c4 = c4v.filter("passes_c4").select("conv_id", "turn_idx")
-        step2 = step2.join(ok_c4, ["conv_id", "turn_idx"],
-                           "left_semi").cache()
+        c4v = textstats.c4_quality(step2, [*keys, "text"],
+                                   text_col="extracted_text")
+        step2 = c4v.filter("passes_c4").select(*keys, "text").cache()
         funnel["after_c4"] = step2.count()
 
-    # 3. language gate
+    # 3. language gate (lang stays cached: --mix reads lang_pred)
     allow = [x.strip() for x in args.langs.split(",") if x.strip()]
-    lang = textstats.lang_id(step2, ["conv_id", "turn_idx"]).cache()
-    ok_l = (lang.filter(F.col("lang_pred").isin(allow))
-            .select("conv_id", "turn_idx"))
-    step3 = step2.join(ok_l, ["conv_id", "turn_idx"], "left_semi").cache()
+    lang = textstats.lang_id(step2, [*keys, "text"]).cache()
+    step3 = lang.filter(F.col("lang_pred").isin(allow)).select(*keys, "text")
     funnel["after_lang"] = step3.count()
 
     # 3b. optional CCNet perplexity gate: rank survivors by
