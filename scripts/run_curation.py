@@ -15,7 +15,11 @@ Stages (each one of the independently-oracle-verified operators):
    partition per core when it has fewer (a one-row-group input reads
    as one partition), so the JVM stages 2-5 run on every core. The
    Python stages before it keep the input's partitioning: each Python
-   map node in a task holds its own worker.
+   map node in a task holds its own worker. The ingest counts
+   (``warc_records``, ``after_url_gate``, ``input_turns``) are
+   ``DataFrame.observe`` metrics on the plan that fills this cache,
+   read after step 2's count: the ingest runs once, with no count
+   action of its own.
 2. **quality gate** — Gopher rule bundle on the extracted text
    (`textstats.gopher_quality`): word count / mean word length /
    symbol ratio / alpha-word ratio / stopword presence.
@@ -41,7 +45,9 @@ Stages (each one of the independently-oracle-verified operators):
    just the leaked spans instead of dropping).
 5. **near-dup removal** — MinHash signatures → LSH candidate pairs
    (one bucket aggregation, no self-join) → star connected
-   components → one canonical doc per cluster
+   components, finished by a one-task union-find once the edge table
+   is at most ``dedup.LOCAL_FINISH_EDGES`` rows (at once, for a
+   near-dup graph this size) → one canonical doc per cluster
    (`dedup.dedup_canonical` composition).
 6. **corpus mixing** (``--mix 'en=0.6,fr=0.4'``) — deterministic
    hash-Bernoulli sampling so language strata follow the requested
@@ -159,7 +165,7 @@ def main() -> None:
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
     spark = (SparkSession.builder.master(f"local[{args.cpus}]")
@@ -176,7 +182,14 @@ def main() -> None:
     from html_parser_spark.sources.transcripts import wrap_documents
 
     t0 = time.monotonic()
-    funnel: dict[str, int] = {}
+    funnel: dict[str, int | Observation] = {}
+
+    def observed(df, key):
+        """``df`` counting its rows into ``funnel[key]`` as it runs:
+        an Observation, read after the first action over the extract
+        cache (step 2)."""
+        funnel[key] = Observation()
+        return df.observe(funnel[key], F.count(F.lit(1)).alias("n"))
 
     tr = wrap_documents(spark, args.input)
     if args.warc:
@@ -187,8 +200,7 @@ def main() -> None:
         # directly). Only 200 text/html responses proceed.
         from html_parser_spark.sources.warc import (
             synth_warc, warc_records)
-        recs = warc_records(synth_warc(tr))
-        funnel["warc_records"] = recs.count()
+        recs = observed(warc_records(synth_warc(tr)), "warc_records")
         resp = recs.filter((F.col("warc_type") == "response")
                            & (F.col("http_status") == 200)
                            & F.col("content_type")
@@ -205,7 +217,7 @@ def main() -> None:
                     .filter("keep_url")
                     .drop("host", "blocked_domain", "blocked_pattern",
                           "soft_score", "keep_url"))
-            funnel["after_url_gate"] = resp.count()
+            resp = observed(resp, "after_url_gate")
         tr = (resp
               .select(F.col("doc_id").cast("string")
                       .alias("conv_id"),
@@ -215,7 +227,9 @@ def main() -> None:
                       F.lit(None).cast("string").alias("tool"),
                       F.to_timestamp(
                           F.lit("2026-01-01 00:00:00")).alias("ts")))
-    funnel["input_turns"] = tr.count()
+    # the ingest counts ride on the plan that fills the extract cache
+    # below, so the ingest runs once
+    tr = observed(tr, "input_turns")
 
     # 1. extract. Each gate below filters its own output in place,
     # carrying the text through its key columns: (conv_id, turn_idx)
@@ -271,6 +285,10 @@ def main() -> None:
                                  min_words=args.min_words)
     step2 = q.filter("passes_gopher").select(*keys, "text", *c4_cols).cache()
     funnel["after_quality"] = step2.count()
+    # that action filled the extract cache: the ingest counts are in
+    for k, v in funnel.items():
+        if isinstance(v, Observation):
+            funnel[k] = v.get["n"]
 
     # 2b. optional C4 page gate — judged on the LINE-structured
     # as-extracted text (trimmed/collapsed text has no newlines for

@@ -19,6 +19,7 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 import corpus  # noqa: E402
+import tracing  # noqa: E402
 
 WARC_FUNNEL = {"warc_records": 1500, "input_turns": 500,
                "after_quality": 398, "after_lang": 92, "after_dedup": 87}
@@ -59,3 +60,52 @@ def test_curation_dedup_lines_c4_funnel(docs, tmp_path):
                       "line_scrubbed_turns": 0, "after_quality": 398,
                       "after_c4": 0, "after_lang": 0, "after_dedup": 0}
     assert rows == 0
+
+
+@pytest.mark.parametrize("blocked, funnel_want", [
+    # every synthetic response is served from ex.com: the gate drops all
+    ("ex.com", {"warc_records": 1500, "after_url_gate": 0,
+                "input_turns": 0, "after_quality": 0, "after_lang": 0,
+                "after_dedup": 0}),
+    ("other.org", {"warc_records": 1500, "after_url_gate": 500,
+                   "input_turns": 500, "after_quality": 398,
+                   "after_lang": 92, "after_dedup": 87}),
+])
+def test_curation_url_blocklist_funnel(docs, tmp_path, blocked, funnel_want):
+    """The URL gate's count, recorded when every ingest stage still ran
+    its own count action, in the same key order."""
+    funnel, rows = _run(docs, tmp_path, "--url-blocklist", blocked)
+    assert list(funnel.items()) == list(funnel_want.items())
+    assert rows == funnel["after_dedup"]
+
+
+def test_curation_ingest_runs_once(docs, tmp_path, monkeypatch):
+    """The WARC record walk runs in one query: the ingest counts ride on
+    the plan that fills the extract cache instead of running their own
+    actions. Read from the run's event log: the queries that ran a task
+    updating a metric of the ``warc_records`` map node."""
+    conf, events = tmp_path / "conf", tmp_path / "events"
+    conf.mkdir()
+    events.mkdir()
+    (conf / "spark-defaults.conf").write_text(
+        "spark.eventLog.enabled true\n"
+        f"spark.eventLog.dir file://{events}\n"
+        "spark.eventLog.rolling.enabled false\n"
+        "spark.eventLog.compress false\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    funnel, _ = _run(docs, tmp_path)
+    assert funnel == WARC_FUNNEL
+    (name,) = os.listdir(events)
+    with open(events / name) as fh:
+        log = tracing.parse_event_log(fh)
+    accums = {m["accumulatorId"]
+              for ex in log.executions.values()
+              for node in tracing.plan_nodes(ex["plan"])
+              if "MapInArrow" in node["nodeName"]
+              and "warc_type" in node.get("simpleString", "")
+              for m in node.get("metrics", [])}
+    assert accums
+    ran = {job["execution"] for job in log.jobs.values()
+           for sid in job["stages"]
+           if sid in log.stages and log.stages[sid]["accums"] & accums}
+    assert len(ran) == 1, ran
