@@ -767,9 +767,10 @@ def _q_repetition_stats(spark, sf_dir):
 
 def _q_minhash_sigs(spark, sf_dir):
     """Both signature families in one row set: md5k (one md5 per
-    (shingle, hash)) joined with md5slice (one md5 per shingle,
-    8 independent 16-bit slices — the 100 TB hashing-cost default)
-    on doc_id; the oracle rebuilds both families."""
+    (shingle, hash) — the code default and curation's family) joined
+    with md5slice (one md5 per shingle, 8 independent 16-bit slices —
+    1/K the hashing cost) on doc_id; the oracle rebuilds both
+    families."""
     from html_parser_spark.operators.dedup import minhash_signatures
 
     docs = _docs(spark, sf_dir)
@@ -1080,8 +1081,7 @@ def _q_link_graph(spark, sf_dir):
 def _q_dedup_canonical(spark, sf_dir):
     """Composed dedup tail on a LONG-CHAIN fixture (edges doc_id ->
     doc_id+1 within blocks of 100): components of diameter ~100, the
-    case O(diameter) min-label propagation handles worst — exercises
-    the star-CC default of dedup_canonical."""
+    case O(diameter) label propagation would handle worst."""
     from html_parser_spark.operators.dedup import dedup_canonical
 
     d = _docs(spark, sf_dir).select("doc_id")
@@ -1186,21 +1186,16 @@ def _q_curate_corpus(spark, sf_dir):
 
 
 def _q_dedup_components(spark, sf_dir):
-    """Both CC algorithms over the same LSH pairs in one row set:
-    min-label propagation and the O(log n)-round large-star/small-star
-    variant, joined on id — both must land on the identical
+    """Large-star/small-star components over the LSH pairs: the
     min-id-per-component labeling the recursive-CTE oracle derives."""
     from html_parser_spark.operators.dedup import (
-        connected_components, connected_components_star,
-        lsh_candidate_pairs, minhash_signatures)
+        connected_components_star, lsh_candidate_pairs,
+        minhash_signatures)
     sigs = minhash_signatures(_docs(spark, sf_dir), num_hashes=8)
     pairs = lsh_candidate_pairs(sigs, num_hashes=8, band_size=2,
                                 max_bucket=1_000_000)
-    minlabel = connected_components(pairs).withColumnRenamed(
-        "component", "component_minlabel")
-    star = connected_components_star(pairs).withColumnRenamed(
+    return connected_components_star(pairs).withColumnRenamed(
         "component", "component_star")
-    return minlabel.join(star, "id")
 
 
 def _tmpl(spark, sf_dir, sql_expr: str):
@@ -2833,8 +2828,7 @@ def oracle_sql() -> dict[str, str]:
               UNION
               SELECT e.u, r.label FROM edges e JOIN reach r
                 ON e.v = r.u)
-            SELECT u AS id, min(label) AS component_minlabel,
-                   min(label) AS component_star
+            SELECT u AS id, min(label) AS component_star
             FROM reach GROUP BY u""",
         "passage_dedup": f"""
             WITH d AS (SELECT doc_id, {_T_PASSAGE} AS text

@@ -16,12 +16,13 @@ Scale notes (the whole point of these designs):
   and needs no join. A hot bucket (degenerate band) would explode
   quadratically — ``max_bucket`` caps it, the standard guard at
   corpus scale.
-* **connected_components_star** — large-star/small-star rounds, each
-  one checkpoint plus one aggregate, only while the edge table holds
-  more than ``LOCAL_FINISH_EDGES`` rows; at or under it (the usual
-  near-dup graph from the start, a large one once contracted) a
-  sequential union-find finishes in one task, its worker measured at
-  ≤314 MB RSS at that size.
+* **connected_components_star** — the one components algorithm
+  (``dedup_canonical`` keeps each component's min id): large-star/
+  small-star rounds, each one checkpoint plus one aggregate, only
+  while the edge table holds more than ``LOCAL_FINISH_EDGES`` rows;
+  at or under it (the usual near-dup graph from the start, a large
+  one once contracted) a sequential union-find finishes in one task,
+  its worker measured at ≤314 MB RSS at that size.
 * **simhash** — md5-derived 64-bit signature entirely in JVM
   expressions; near-dup = signatures at small Hamming distance,
   found via exact-match on four 16-bit bands (65,536 bucket values
@@ -411,65 +412,6 @@ def ngram_jaccard_pairs(df: DataFrame, key_col: str = "doc_id",
     return j.filter(F.col("jaccard") >= threshold)
 
 
-def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 25,
-                         on_nonconverged: str = "warn") -> DataFrame:
-    """Cluster near-dup pairs into components: (id, component) with
-    component = min reachable id.
-
-    Min-label propagation: each round every node takes the smallest
-    label among itself and its neighbors; converges in <= graph
-    diameter rounds (near-dup clusters are shallow). Each round is
-    one equi-join + hash-aggregate, so the per-round shuffle is O(E).
-    For giant / long-chain components (diameter > ``max_iter``) use
-    :func:`connected_components_star` — O(log n) rounds and
-    skew-resistant; this function refuses to return silently-wrong
-    labels: ``on_nonconverged`` = 'warn' (log + warn) or 'error'
-    (raise) when the loop exits by max_iter while labels were still
-    changing.
-
-    Composes the dedup pipeline end-to-end:
-    minhash/simhash/jaccard pairs -> components -> keep min id per
-    component (``dedup_canonical``).
-    """
-    e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    edges = (e.union(e.select(F.col("v").alias("u"),
-                              F.col("u").alias("v")))
-             .distinct().cache())
-    labels = (edges.select("u").distinct()
-              .withColumn("label", F.col("u")).localCheckpoint())
-    changed = 0
-    for _ in range(max_iter):
-        nbr = (edges.join(labels.withColumnRenamed("u", "v"), "v")
-               .groupBy("u").agg(F.min("label").alias("nbr_label")))
-        # localCheckpoint truncates the per-round plan growth (see
-        # connected_components_star)
-        new_labels = (
-            labels.join(nbr, "u", "left")
-            .select("u", F.least(
-                F.col("label"),
-                F.coalesce("nbr_label", F.col("label"))).alias("label"))
-            .localCheckpoint())
-        changed = (new_labels.withColumnRenamed("label", "new_label")
-                   .join(labels, "u")
-                   .filter(F.col("new_label") != F.col("label")).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed:
-        msg = (f"connected_components did not converge in {max_iter} "
-               f"rounds ({changed} labels still changing) — component "
-               f"diameter exceeds max_iter; use "
-               f"connected_components_star for long chains")
-        if on_nonconverged == "error":
-            raise RuntimeError(msg)
-        import warnings
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels.select(F.col("u").alias("id"),
-                         F.col("label").alias("component"))
-
-
 #: Edge count at or under which :func:`connected_components_star`
 #: finishes with a sequential union-find in one task instead of more
 #: star rounds. Measured on a 4-vCPU host (local[4]), ``"<n>#<k>"``
@@ -478,6 +420,11 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 #: and at 314 MB for 1,000,000 edges over 2,000,000 ids (6.3 s), the
 #: most ids that many edges can touch; 500,000 edges peak at 168 MB.
 LOCAL_FINISH_EDGES = 1_000_000
+
+#: Round cap of :func:`connected_components_star`. O(log n) rounds
+#: suffice for any graph; labels returned at the cap may conflict,
+#: and a ``RuntimeWarning`` says so.
+STAR_MAX_ROUNDS = 50
 
 #: id types whose Python ordering equals Spark's: integers, and
 #: UTF-8 strings (byte order = code-point order) under the default
@@ -528,16 +475,15 @@ def _union_find_components(edges: DataFrame) -> DataFrame:
 
 
 def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
-                              id_b: str = "id_b", max_iter: int = 50,
-                              on_nonconverged: str = "warn") -> DataFrame:
+                              id_b: str = "id_b") -> DataFrame:
     """Connected components via alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce
     and Beyond", SoCC 2014): (id, component), component = min id.
 
-    Converges in O(log n) rounds regardless of component diameter —
-    the scale path for giant or long-chain duplicate clusters where
-    min-label propagation needs O(diameter) rounds. Each round is two
-    hash-aggregates + two equi-joins, shuffle O(E); no step ever
+    Converges in O(log n) rounds regardless of component diameter, so
+    giant or long-chain duplicate clusters cost no more rounds than
+    shallow ones. Each round is two hash-aggregates + two
+    equi-joins, shuffle O(E); no step ever
     groups a whole component onto one task (the star operations only
     touch direct neighborhoods), so skewed mega-components cannot
     hot-spot a reducer the way naive label broadcast does.
@@ -578,7 +524,7 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
              .distinct().localCheckpoint())
     cur = edges
     stable = False
-    for _ in range(max_iter):
+    for _ in range(STAR_MAX_ROUNDS):
         # large-star
         sym = cur.union(cur.select(F.col("v").alias("u"),
                                    F.col("u").alias("v")))
@@ -616,15 +562,12 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
         if local and tags["n"] <= LOCAL_FINISH_EDGES:
             return _union_find_components(cur)
     if not stable:
-        # mirror connected_components: never return silently-wrong
-        # labels — a non-star edge set yields conflicting rows per id
-        msg = (f"connected_components_star did not converge in "
-               f"{max_iter} rounds; labels may conflict — raise "
-               f"max_iter (O(log n) rounds normally suffice)")
-        if on_nonconverged == "error":
-            raise RuntimeError(msg)
+        # never return silently-wrong labels: a non-star edge set
+        # yields conflicting rows per id
         import warnings
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
+        warnings.warn(f"connected_components_star did not converge in "
+                      f"{STAR_MAX_ROUNDS} rounds; labels may conflict",
+                      RuntimeWarning, stacklevel=2)
     # star edges point non-roots at their component min; roots map to
     # themselves (isolated nodes cannot occur: every input row is an
     # edge between two distinct ids)
@@ -637,24 +580,11 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
 
 
 def dedup_canonical(pairs: DataFrame, id_a: str = "id_a",
-                    id_b: str = "id_b",
-                    algorithm: str = "star") -> DataFrame:
+                    id_b: str = "id_b") -> DataFrame:
     """(id, component, is_canonical): keep rows where is_canonical to
-    retain exactly one representative per near-dup cluster.
-
-    Defaults to the large-star/small-star components (O(log n)
-    rounds, neighborhood-local, skew-resistant) — near-dup graphs at
-    corpus scale contain giant chain components that make the
-    O(diameter) min-label propagation the wrong default.
-    ``algorithm="minlabel"`` keeps the simple variant for small or
-    known-shallow graphs.
-    """
-    if algorithm == "star":
-        comp = connected_components_star(pairs, id_a, id_b)
-    elif algorithm == "minlabel":
-        comp = connected_components(pairs, id_a, id_b)
-    else:
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
+    retain exactly one representative per near-dup cluster, the
+    min id of its :func:`connected_components_star` component."""
+    comp = connected_components_star(pairs, id_a, id_b)
     return comp.select(
         "id", "component",
         (F.col("id") == F.col("component")).alias("is_canonical"))

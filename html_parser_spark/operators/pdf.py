@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from html_parser_spark.arrowmap import arrow_map, synth_payloads
+from html_parser_spark.operators.media import _png_unfilter
 
 PDF_TEXT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -210,53 +211,32 @@ def _zlib_inflate(data: bytes) -> bytes | None:
         return None
 
 
+def _parm(head: bytes, key: bytes, default: int) -> int:
+    """The integer ``/key`` entry of a /DecodeParms dict body."""
+    m = re.search(rb"/" + key + rb"\s+(\d+)", head)
+    return int(m.group(1)) if m else default
+
+
 def _png_predictor(data: bytes, head: bytes) -> bytes | None:
     """Reverse PNG row prediction (/Predictor >= 10, §7.4.4.4): each
     row is one filter-type byte + Columns*Colors*BPC/8 data bytes,
     un-filtered exactly like PNG scanlines (None/Sub/Up/Average/
     Paeth). Used by real writers on Flate object/xref streams
     (Predictor 12 = Up is the common shape)."""
-    def param(key: bytes, default: int) -> int:
-        m = re.search(rb"/" + key + rb"\s+(\d+)", head)
-        return int(m.group(1)) if m else default
-
-    cols = param(b"Columns", 1)
-    colors = param(b"Colors", 1)
-    bpc = param(b"BitsPerComponent", 8)
+    cols = _parm(head, b"Columns", 1)
+    colors = _parm(head, b"Colors", 1)
+    bpc = _parm(head, b"BitsPerComponent", 8)
     rowlen = (cols * colors * bpc + 7) // 8
     bpp = max(1, (colors * bpc) // 8)
-    if rowlen <= 0 or len(data) % (rowlen + 1):
+    # rows of whole pixels only: a sub-byte depth with 16+ bits per
+    # pixel that is not a multiple of 8 (Colors 5 at 4 bits) has none
+    if rowlen <= 0 or rowlen % bpp or len(data) % (rowlen + 1):
         return None
-    out = bytearray()
-    prev = bytearray(rowlen)
-    for r in range(0, len(data), rowlen + 1):
-        ft = data[r]
-        line = bytearray(data[r + 1:r + 1 + rowlen])
-        if ft == 1:    # Sub
-            for i in range(bpp, rowlen):
-                line[i] = (line[i] + line[i - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for i in range(rowlen):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ft == 3:  # Average
-            for i in range(rowlen):
-                a = line[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for i in range(rowlen):
-                a = line[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                line[i] = (line[i] + (a if pa <= pb and pa <= pc
-                                      else b if pb <= pc else c)) \
-                    & 0xFF
-        elif ft != 0:
-            return None
-        out += line
-        prev = line
-    return bytes(out)
+    try:
+        return bytes(_png_unfilter(data, rowlen // bpp,
+                                   len(data) // (rowlen + 1), bpp))
+    except ValueError:   # filter type byte outside 0-4
+        return None
 
 
 def _tiff_predictor(data: bytes, head: bytes) -> bytes | None:
@@ -267,13 +247,9 @@ def _tiff_predictor(data: bytes, head: bytes) -> bytes | None:
     ``s[i] += s[i - Colors]``. Only BitsPerComponent=8 is decoded —
     sub-byte differencing (bpc 1/2/4) needs a bit-level walk no
     mainstream writer emits with Predictor 2, so it stays scope."""
-    def param(key: bytes, default: int) -> int:
-        m = re.search(rb"/" + key + rb"\s+(\d+)", head)
-        return int(m.group(1)) if m else default
-
-    cols = param(b"Columns", 1)
-    colors = param(b"Colors", 1)
-    if param(b"BitsPerComponent", 8) != 8:
+    cols = _parm(head, b"Columns", 1)
+    colors = _parm(head, b"Colors", 1)
+    if _parm(head, b"BitsPerComponent", 8) != 8:
         return None
     rowlen = cols * colors
     if rowlen <= 0 or len(data) % rowlen:
@@ -374,8 +350,7 @@ def _apply_filters(data: bytes, head: bytes) -> bytes | None:
         data = dec(data)
         if data is None:
             return None
-        mp = re.search(rb"/Predictor\s+(\d+)", parm)
-        pred = int(mp.group(1)) if mp else 1
+        pred = _parm(parm, b"Predictor", 1)
         if pred == 2:
             data = _tiff_predictor(data, parm)
         elif pred >= 10:

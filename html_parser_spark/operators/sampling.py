@@ -47,6 +47,8 @@ from typing import Mapping, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from html_parser_spark.operators.similarity import _bounded_topk
+
 __all__ = [
     "uniform_hash_col",
     "stratified_sample",
@@ -416,14 +418,12 @@ def dsir_select(df: DataFrame, target_df: DataFrame, k: int,
     score desc (key asc on ties).
 
     Scale shape: the score is a map-only extension of
-    :func:`dsir_logweights`; the top-k reduction is the same
-    two-phase bounded pattern as ``similarity.cosine_topk`` — each
-    partition is cut to <= k rows in one Arrow pass BEFORE any
-    exchange, so the final single-group merge sees only
-    partitions * k rows, never the corpus.
+    :func:`dsir_logweights`; the top-k reduction is
+    ``similarity._bounded_topk``, the one ``cosine_topk`` runs — each
+    partition is cut to <= k rows BEFORE any exchange, so the final
+    single-group merge sees only partitions * k rows, never the
+    corpus.
     """
-    import pandas as pd
-
     lw = dsir_logweights(df, target_df, key_col, text_col,
                          buckets=buckets, alpha=alpha, ndigits=9)
     # +0.5/2^32 keeps the draw strictly inside (0,1) for the double log
@@ -432,34 +432,4 @@ def dsir_select(df: DataFrame, target_df: DataFrame, k: int,
     scored = lw.withColumn(
         "dsir_score",
         F.round(F.col("dsir_logw") - F.log(-F.log(u)), 9))
-
-    def local_topk(pdfs):
-        acc: list[pd.DataFrame] = []
-        n_acc = 0
-        for pdf in pdfs:
-            acc.append(pdf)
-            n_acc += len(pdf)
-            if n_acc > 64 * k:
-                merged = pd.concat(acc, ignore_index=True)
-                merged = merged.sort_values(
-                    ["dsir_score", key_col],
-                    ascending=[False, True]).head(k)
-                acc, n_acc = [merged], len(merged)
-        if acc:
-            yield (pd.concat(acc, ignore_index=True)
-                   .sort_values(["dsir_score", key_col],
-                                ascending=[False, True]).head(k))
-
-    partial = scored.mapInPandas(local_topk, scored.schema)
-    cand = F.struct((-F.col("dsir_score")).alias("ns"),
-                    F.col(key_col).alias("key"),
-                    F.col("dsir_logw").alias("lw"),
-                    F.col("dsir_score").alias("sc"))
-    return (partial.groupBy()
-            .agg(F.slice(F.array_sort(F.collect_list(cand)), 1, k)
-                 .alias("top"))
-            .select(F.posexplode("top").alias("_pos", "t"))
-            .select(F.col("t.key").alias(key_col),
-                    F.col("t.lw").alias("dsir_logw"),
-                    F.col("t.sc").alias("dsir_score"),
-                    (F.col("_pos") + 1).cast("int").alias("rank")))
+    return _bounded_topk(scored, k, "dsir_score", key_col)

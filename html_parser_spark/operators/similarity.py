@@ -72,19 +72,36 @@ def cosine_topk(df: DataFrame, query_df: DataFrame, k: int = 10,
     determinism); output adds a 1-based ``rank``.
 
     Two-phase, shuffle-bounded: scoring stays JVM-side (broadcast
-    queries, codegen dot products), then a per-partition bounded
-    top-k reduction (vectorized pandas over Arrow batches) cuts each
-    partition to <= queries*k rows BEFORE any exchange. The only
+    queries, codegen dot products), then :func:`_bounded_topk` cuts
+    each partition to <= queries*k rows BEFORE any exchange. The only
     shuffle therefore carries <= partitions*queries*k rows — with
     many queries the global-window formulation instead shuffles and
-    sorts all n*q scored rows, which is the corpus itself. The final
-    merge is an array_sort over <= partitions*k candidates per query
-    (exact: every global top-k row is a top-k row of its partition).
+    sorts all n*q scored rows, which is the corpus itself.
     """
-    import pandas as pd
-
     scored = cosine_neighbors(df, query_df, key_col, vec_col,
                               query_key, threshold=-1.0)
+    return _bounded_topk(scored, k, "cos_sim", key_col, query_key)
+
+
+def _bounded_topk(scored: DataFrame, k: int, score: str, key: str,
+                  group: str | None = None) -> DataFrame:
+    """Exact top-``k`` rows of ``scored`` by ``score`` desc, ``key``
+    asc on ties, per ``group`` value (one global group when None):
+    ``scored``'s columns plus a 1-based int ``rank``.
+
+    Each partition is cut to its own top-k per group in pandas (re-cut
+    whenever over 64·k rows are buffered); one array_sort per group
+    then merges the <= partitions·k candidates, exact since every
+    global top-k row is a top-k row of its partition. No Window."""
+    import pandas as pd
+
+    groups = [group] if group else []
+    order = [*groups, score, key]
+    asc = [True] * len(groups) + [False, True]
+
+    def cut(pdf):
+        pdf = pdf.sort_values(order, ascending=asc)
+        return (pdf.groupby(groups, sort=False) if groups else pdf).head(k)
 
     def local_topk(pdfs):
         acc: list[pd.DataFrame] = []
@@ -93,33 +110,22 @@ def cosine_topk(df: DataFrame, query_df: DataFrame, k: int = 10,
             acc.append(pdf)
             n_acc += len(pdf)
             if n_acc > 64 * k:  # re-reduce to bound buffer memory
-                merged = pd.concat(acc, ignore_index=True)
-                merged = (merged.sort_values(
-                    [query_key, "cos_sim", key_col],
-                    ascending=[True, False, True])
-                    .groupby(query_key, sort=False).head(k))
-                acc, n_acc = [merged], len(merged)
+                acc = [cut(pd.concat(acc, ignore_index=True))]
+                n_acc = len(acc[0])
         if acc:
-            merged = pd.concat(acc, ignore_index=True)
-            yield (merged.sort_values(
-                [query_key, "cos_sim", key_col],
-                ascending=[True, False, True])
-                .groupby(query_key, sort=False).head(k))
+            yield cut(pd.concat(acc, ignore_index=True))
 
     partial = scored.mapInPandas(local_topk, scored.schema)
-    # global exact merge: sort each query's <= P*k candidates once
-    # (struct order: -cos asc == cos desc, then key asc for ties)
-    cand = F.struct((-F.col("cos_sim")).alias("nc"),
-                    F.col(key_col).alias("key"),
-                    F.col("cos_sim").alias("cos"))
+    # struct order: -score asc == score desc, then key asc for ties
+    rest = [c for c in scored.columns if c not in groups]
+    cand = F.struct((-F.col(score)).alias("_neg"), F.col(key),
+                    *[F.col(c) for c in rest if c != key])
     return (
-        partial.groupBy(query_key)
+        partial.groupBy(*groups)
         .agg(F.slice(F.array_sort(F.collect_list(cand)), 1, k)
-             .alias("top"))
-        .select(query_key, F.posexplode("top").alias("_pos", "t"))
-        .select(query_key,
-                F.col("t.key").alias(key_col),
-                F.col("t.cos").alias("cos_sim"),
+             .alias("_top"))
+        .select(*groups, F.posexplode("_top").alias("_pos", "_t"))
+        .select(*groups, *[F.col("_t").getField(c).alias(c) for c in rest],
                 (F.col("_pos") + 1).cast("int").alias("rank"))
     )
 

@@ -230,6 +230,10 @@ def main() -> None:
     # the ingest counts ride on the plan that fills the extract cache
     # below, so the ingest runs once
     tr = observed(tr, "input_turns")
+    if args.render:
+        # step 6c joins role/tool back from the ingest: cached, it is
+        # filled by the same query as the extract cache, not re-run
+        tr = tr.cache()
 
     # 1. extract. Each gate below filters its own output in place,
     # carrying the text through its key columns: (conv_id, turn_idx)

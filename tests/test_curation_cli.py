@@ -79,11 +79,9 @@ def test_curation_url_blocklist_funnel(docs, tmp_path, blocked, funnel_want):
     assert rows == funnel["after_dedup"]
 
 
-def test_curation_ingest_runs_once(docs, tmp_path, monkeypatch):
-    """The WARC record walk runs in one query: the ingest counts ride on
-    the plan that fills the extract cache instead of running their own
-    actions. Read from the run's event log: the queries that ran a task
-    updating a metric of the ``warc_records`` map node."""
+def _ingest_queries(docs, tmp_path, monkeypatch, *flags) -> tuple[dict, set]:
+    """Run the CLI with an event log; return its funnel and the queries
+    that ran a task updating a metric of the ``warc_records`` map node."""
     conf, events = tmp_path / "conf", tmp_path / "events"
     conf.mkdir()
     events.mkdir()
@@ -93,8 +91,7 @@ def test_curation_ingest_runs_once(docs, tmp_path, monkeypatch):
         "spark.eventLog.rolling.enabled false\n"
         "spark.eventLog.compress false\n")
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
-    funnel, _ = _run(docs, tmp_path)
-    assert funnel == WARC_FUNNEL
+    funnel, _ = _run(docs, tmp_path, *flags)
     (name,) = os.listdir(events)
     with open(events / name) as fh:
         log = tracing.parse_event_log(fh)
@@ -105,7 +102,24 @@ def test_curation_ingest_runs_once(docs, tmp_path, monkeypatch):
               and "warc_type" in node.get("simpleString", "")
               for m in node.get("metrics", [])}
     assert accums
-    ran = {job["execution"] for job in log.jobs.values()
-           for sid in job["stages"]
-           if sid in log.stages and log.stages[sid]["accums"] & accums}
+    return funnel, {job["execution"] for job in log.jobs.values()
+                    for sid in job["stages"]
+                    if sid in log.stages and log.stages[sid]["accums"] & accums}
+
+
+def test_curation_ingest_runs_once(docs, tmp_path, monkeypatch):
+    """The WARC record walk runs in one query: the ingest counts ride on
+    the plan that fills the extract cache instead of running their own
+    actions."""
+    funnel, ran = _ingest_queries(docs, tmp_path, monkeypatch)
+    assert funnel == WARC_FUNNEL
+    assert len(ran) == 1, ran
+
+
+def test_curation_render_ingest_runs_once(docs, tmp_path, monkeypatch):
+    """Re-assembling conversations joins role/tool back from the ingest,
+    which must not run the WARC record walk a second time."""
+    funnel, ran = _ingest_queries(docs, tmp_path, monkeypatch,
+                                  "--render-conversations")
+    assert funnel == {**WARC_FUNNEL, "rendered_convs": 87}
     assert len(ran) == 1, ran

@@ -339,11 +339,9 @@ def test_embedding_near_dup_bucketed_matches_exhaustive_subset(
 
 
 def test_connected_components_star_long_chain(spark):
-    """Star contraction must label a long-chain component (diameter >>
-    min-label's max_iter) identically to ground truth, where the
-    min-label loop would need O(diameter) rounds."""
-    import warnings
-
+    """Star contraction must label a long-chain component identically
+    to ground truth, where label propagation would need O(diameter)
+    rounds."""
     n = 60
     chain = [(i, i + 1) for i in range(n)]          # one 61-node chain
     extra = [(100, 101), (103, 101)]                # plus a small comp
@@ -352,22 +350,13 @@ def test_connected_components_star_long_chain(spark):
            for r in dedup.connected_components_star(pairs).collect()}
     assert got == {**{i: 0 for i in range(n + 1)},
                    **{100: 100, 101: 100, 103: 100}}
-    # min-label with too-few rounds must refuse to be silently wrong
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        dedup.connected_components(pairs, max_iter=3).collect()
-    assert any("did not converge" in str(x.message) for x in w)
-    import pytest as _pytest
-    with _pytest.raises(RuntimeError):
-        dedup.connected_components(pairs, max_iter=3,
-                                   on_nonconverged="error")
 
 
 def test_connected_components_and_canonical(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 1)], "id_a long, id_b long")
     comp = {r.id: r.component
-            for r in dedup.connected_components(pairs).collect()}
+            for r in dedup.connected_components_star(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5}
     keep = {r.id: r.is_canonical
             for r in dedup.dedup_canonical(pairs).collect()}
@@ -984,9 +973,8 @@ def test_lang_id_null_empty_and_filter_pushdown(spark):
 
 
 def test_dedup_canonical_star_long_chain(spark):
-    """dedup_canonical defaults to star CC: a 120-long chain (diameter
-    far beyond min-label's comfortable round budget) must resolve to
-    one component with exactly one canonical row, in O(log n) rounds."""
+    """dedup_canonical on a 120-long chain must resolve to one
+    component with exactly one canonical row."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(120)], "id_a long, id_b long")
     out = dedup.dedup_canonical(pairs).collect()
@@ -2326,6 +2314,19 @@ def test_png_unfilter_average_paeth():
         f1.append((v - pr) & 0xFF)                   # Paeth
     buf = bytes([3]) + bytes(f0) + bytes([4]) + bytes(f1)
     assert bytes(media._png_unfilter(buf, 2, 2)) == raw0 + raw1
+
+
+def test_png_predictor_rejects_bad_filters_and_split_pixels():
+    """PDF PNG-predictor rows decode through ``media._png_unfilter``; a
+    filter type above 4, and rows that end mid-pixel (5 colors at 4
+    bits: 20-bit pixels, 3-byte rows), are undecodable, not guessed."""
+    from html_parser_spark.operators.pdf import _png_predictor
+
+    head = b"/Predictor 12 /Columns 4"
+    assert _png_predictor(bytes([1, 1, 2, 3, 4]), head) == bytes([1, 3, 6, 10])
+    assert _png_predictor(bytes([5, 1, 2, 3, 4]), head) is None
+    assert _png_predictor(
+        bytes(4), b"/Columns 1 /Colors 5 /BitsPerComponent 4") is None
 
 
 def test_content_blocks_density_rules(spark):

@@ -18,7 +18,7 @@ import pytest
 
 from html_parser_spark.operators import dedup
 
-#: 120-long chain: diameter far beyond min-label propagation's rounds
+#: 120-long chain: diameter 120, yet O(log n) star rounds label it
 CHAIN = [(i, i + 1) for i in range(120)]
 
 
@@ -107,6 +107,16 @@ def test_random_long_ids_both_arms(spark, arm, seed):
 def test_random_string_ids_both_arms(spark, arm, seed):
     pairs = _random_pairs(seed, _string_ids(seed))
     assert arm(spark, pairs, "id_a string, id_b string") == _reference(pairs)
+
+
+def test_star_rounds_warn_when_not_converged(spark, monkeypatch):
+    """One star round cannot contract the chain: the capped loop warns
+    that its labels may conflict instead of returning them silently."""
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_EDGES", 0)
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", 1)
+    df = spark.createDataFrame(CHAIN, "id_a long, id_b long")
+    with pytest.warns(RuntimeWarning, match="did not converge in 1 "):
+        dedup.connected_components_star(df).collect()
 
 
 def test_small_graph_dedup_runs_few_jobs(spark):
