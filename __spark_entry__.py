@@ -766,19 +766,12 @@ def _q_repetition_stats(spark, sf_dir):
 
 
 def _q_minhash_sigs(spark, sf_dir):
-    """Both signature families in one row set: md5k (one md5 per
-    (shingle, hash) — the code default and curation's family) joined
-    with md5slice (one md5 per shingle, 8 independent 16-bit slices —
-    1/K the hashing cost) on doc_id; the oracle rebuilds both
-    families."""
+    """Eight md5 minhashes per doc (one md5 per (shingle, hash), the
+    signatures curation's near-dup stage bands); the oracle rebuilds
+    every one."""
     from html_parser_spark.operators.dedup import minhash_signatures
 
-    docs = _docs(spark, sf_dir)
-    k = minhash_signatures(docs, num_hashes=8)
-    fast = minhash_signatures(docs, num_hashes=8, family="md5slice")
-    fast = fast.select("doc_id", *[F.col(f"h{i}").alias(f"f{i}")
-                                   for i in range(8)])
-    return k.join(fast, "doc_id")
+    return minhash_signatures(_docs(spark, sf_dir), num_hashes=8)
 
 
 def _q_audio_stats(spark, sf_dir):
@@ -2621,9 +2614,7 @@ def oracle_sql() -> dict[str, str]:
                          / len(words), 3) AS dup_word_ratio
             FROM s""",
         "minhash_sigs": f"""
-            SELECT doc_id, {_MINHASH_AGGS}, {", ".join(
-                f"min(substr(md5(s), {4 * i + 1}, 4)) AS f{i}"
-                for i in range(8))}
+            SELECT doc_id, {_MINHASH_AGGS}
             FROM ({_SHINGLES}) GROUP BY doc_id""",
         "audio_stats": """
             WITH p AS (SELECT doc_id,

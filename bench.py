@@ -14,18 +14,14 @@ turn_idx is appended inside the text) so the run is long enough to
 time; the factor is identical across cpu counts, so scaling-efficiency
 comparisons (scripts/scaling_bench.py) are apples-to-apples.
 
-Measurement protocol (shared-host noise mitigation): all queries run
+Measurement protocol: a fixed warm-up, then all queries run
 INTERLEAVED for ``SPARK_GRAFT_TRIALS`` (default 3) round-robin
-rounds; queries whose own trials still disagree by >1.8x get up to
-two extra rounds (uniform rule, min over all recorded trials is the
-record). The full trial matrix plus a fixed pure-JVM ``host_probe``
-job per round are emitted in the JSON so background load is visible
-in the artifact itself; if the probe's own spread exceeds 3x, up to
-three more full rounds run until one lands in a quiet window (probe
-within 1.5x of the best seen) — a uniform all-queries rule, so a
-single noisy window cannot set any record and a quiet window is
-guaranteed a shot at every query. The ``conv_extract_skew_*`` pair
-demonstrates the salting claim with a number: identical op + subset,
+rounds, and nothing else. Each query's record is its min over the
+rounds (``queries``), reported next to its median
+(``queries_median``). The full trial matrix plus a fixed pure-JVM
+``host_probe`` job per round are emitted in the JSON so background
+load is visible in the artifact itself. The ``conv_extract_skew_*``
+pair demonstrates the salting claim with a number: identical op + subset,
 conv-partitioned with ~50% of rows on one hot key, with and without
 ``salted_repartition``; both arms are excluded from the headline
 total (one is a deliberate straggler) and reported under
@@ -36,6 +32,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -166,15 +163,11 @@ def main() -> None:
         ("conv_extract_skew_salted", lambda: run_conv_extract(True)),
     ]
 
-    # INTERLEAVED best-of-N: all queries run in round-robin so a noisy
+    # INTERLEAVED rounds: all queries run round-robin so a noisy
     # window on this shared host cannot define any single query's
     # record; the full trial matrix is emitted so spread is visible in
-    # the artifact itself. Queries whose own trials still disagree by
-    # >1.8x after the base rounds get up to two extra rounds — a
-    # uniform rule (any unstable query re-runs; min over ALL recorded
-    # trials is the record), not per-query cherry-picking. host_probe
-    # is a fixed pure-JVM job timed each round: its spread documents
-    # the machine's background load directly in the artifact.
+    # the artifact itself. host_probe is a fixed pure-JVM job timed
+    # each round: its spread documents the machine's background load.
     def host_probe():
         spark.range(200_000_000).agg(F.sum("id")).collect()
 
@@ -182,52 +175,11 @@ def main() -> None:
     all_q = QUERIES + [("host_probe", host_probe)]
     trials: dict[str, list[float]] = {name: [] for name, _ in all_q}
 
-    def one_round(qs):
-        for name, fn in qs:
+    for _ in range(n_trials):
+        for name, fn in all_q:
             t0 = time.monotonic()
             fn()
             trials[name].append(round(time.monotonic() - t0, 3))
-
-    for _ in range(n_trials):
-        one_round(all_q)
-    for _ in range(2):
-        unstable = [(n, f) for n, f in all_q
-                    if max(trials[n]) / max(min(trials[n]), 1e-9) > 1.8]
-        if not unstable:
-            break
-        one_round(unstable)
-    # Host-probe-gated extra rounds (uniform rule, all queries — not
-    # per-query cherry-picking): when the fixed pure-JVM probe's
-    # spread shows the host was >3x noisier in some rounds than
-    # others, one bad window could own every record, so run up to
-    # three more full interleaved rounds until a round lands whose
-    # probe is within 1.5x of the best probe seen (i.e. the machine
-    # was actually quiet for that round).
-    for _ in range(3):
-        probes = trials["host_probe"]
-        if max(probes) / max(min(probes), 1e-9) <= 3.0:
-            break
-        before = len(probes)
-        one_round(all_q)
-        if trials["host_probe"][before] <= min(probes) * 1.5:
-            break
-    # Steady-state rule (uniform, all queries — not per-query cherry-
-    # picking): a query whose RECORD was set in the latest round and
-    # beat its previous best by >5% has not reached steady state yet
-    # (JIT warm-up and allocator reuse keep improving trials for
-    # several rounds in a shared JVM; the dedicated-session control in
-    # the builder log shows extract_text ~40% under its 6th shared-
-    # session trial). Run extra full interleaved rounds, bounded,
-    # until a round sets no new >5% records. All trials stay in the
-    # artifact, so the convergence is visible.
-    for _ in range(3):
-        improving = any(
-            len(ts) >= 2 and ts[-1] == min(ts)
-            and sorted(ts)[1] > ts[-1] * 1.05
-            for n, ts in trials.items() if n != "host_probe")
-        if not improving:
-            break
-        one_round(all_q)
     timings = {name: min(ts) for name, ts in trials.items()
                if name != "host_probe"}
 
@@ -246,6 +198,8 @@ def main() -> None:
         "unit": "sec",
         "queries": {n: t for n, t in timings.items()
                     if n not in skew_arms},
+        "queries_median": {n: round(statistics.median(trials[n]), 3)
+                           for n in timings if n not in skew_arms},
         "skew_demo": {n: timings[n] for n in sorted(skew_arms)},
         "trials": trials,
         "sf": sf_dir,

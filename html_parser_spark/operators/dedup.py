@@ -87,54 +87,19 @@ def shingle_rows(df: DataFrame, key_col: str, text_col: str,
 
 def minhash_signatures(df: DataFrame, key_col: str = "doc_id",
                        text_col: str = "text", num_hashes: int = 8,
-                       n: int = 3, family: str = "md5k") -> DataFrame:
+                       n: int = 3) -> DataFrame:
     """K md5-minhashes per document as a NARROW projection — no
     explode, no shuffle — entirely inside whole-stage codegen. At
     100 TB this stage is map-only: signature cost scales with input
     bytes, cluster scales linearly, and only the (tiny) signature
     table ever shuffles.
 
-    Two hash families, both reproducible in any engine with md5:
-
-    * ``family='md5k'`` (default): h_i = md5(shingle || '#i') — K
-      independent full-width hashes, K md5 calls per shingle. String
-      min over hex digests is a valid uniform minhash.
-    * ``family='md5slice'``: ONE md5 per shingle; h_i = hex nibbles
-      [4i, 4i+4) of the digest — K independent 16-bit hashes (md5
-      output bits are uniform/independent) at 1/K the hashing cost.
-      Quality cost: min-value ties within a document's shingle set
-      (16-bit range) slightly widen LSH buckets, but identical sets
-      still hash identically so true duplicates are never dropped.
-      Measured at sandbox scale the two families tie (shingle
-      construction dominates, not hashing); reach for this one when
-      K is large or shingles are long enough that digesting them K
-      times actually shows up. Requires num_hashes <= 8.
+    h_i = md5(shingle || '#i'): K independent full-width hashes,
+    reproducible in any engine with md5. String min over hex digests
+    is a valid uniform minhash.
     """
-    if family not in ("md5k", "md5slice"):
-        raise ValueError(f"unknown minhash family {family!r} "
-                         "(md5k | md5slice) — a typo must not "
-                         "silently fall through to md5k and "
-                         "desynchronize stored signatures")
     with_sh = df.select(F.col(key_col),
                         shingles_col(F.col(text_col), n).alias("_sh"))
-    if family == "md5slice":
-        if num_hashes * 4 > 32:
-            raise ValueError("md5slice supports at most 8 hashes")
-        with_m = with_sh.select(
-            key_col,
-            F.transform(F.col("_sh"), lambda s: F.md5(
-                s.cast("binary"))).alias("_m"))
-        def _slice_i(i: int):
-            # single-arg lambda: a default-arg lambda would be seen as
-            # two-arg by F.transform and receive the element index
-            return lambda m: F.substring(m, 4 * i + 1, 4)
-
-        mins = [
-            F.array_min(F.transform(F.col("_m"), _slice_i(i)))
-            .alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-        return with_m.select(key_col, *mins)
     def _hash_i(i: int):
         # NB: the returned lambda must be single-arg — F.transform
         # passes (element, index) to two-arg callables
@@ -758,18 +723,18 @@ def _positional_shingle_hashes(df: DataFrame, key_col: str,
                     F.posexplode(shingles).alias("pos", "h")))
 
 
-def _eval_shingle_hashes(eval_df: DataFrame, text_col: str, n: int,
-                         broadcast_eval: bool) -> DataFrame:
+def _eval_shingle_hashes(eval_df: DataFrame, text_col: str,
+                         n: int) -> DataFrame:
     """(h): DISTINCT 64-bit hashes of the eval table's word
-    ``n``-shingles, broadcast by default (eval sets are megabytes
-    against a 100 TB corpus).  Shared by drop-mode and span-mode
+    ``n``-shingles, broadcast (eval sets are megabytes against a
+    100 TB corpus).  Shared by drop-mode and span-mode
     decontamination."""
     ev = (eval_df
           .select(F.explode(
               shingles_col(F.col(text_col), n)).alias("_s"))
           .select(F.xxhash64("_s").alias("h"))
           .distinct())
-    return F.broadcast(ev) if broadcast_eval else ev
+    return F.broadcast(ev)
 
 
 def _merge_dup_positions(dup: DataFrame, key_col: str,
@@ -832,8 +797,7 @@ def remove_dup_passages(df: DataFrame, spans: DataFrame | None = None,
 
 def decontaminate(df: DataFrame, eval_df: DataFrame,
                   key_col: str = "doc_id", text_col: str = "text",
-                  eval_text_col: str = "text", n: int = 13,
-                  broadcast_eval: bool = True) -> DataFrame:
+                  eval_text_col: str = "text", n: int = 13) -> DataFrame:
     """Benchmark decontamination: drop every corpus document that
     shares at least one ``n``-word shingle with any document of
     ``eval_df`` (the held-out eval/benchmark table), returning the
@@ -848,13 +812,10 @@ def decontaminate(df: DataFrame, eval_df: DataFrame,
     to find contaminated ids, then left-anti on the key), so the
     corpus text is never shuffled; the only exchange is the distinct
     on contaminated ids, output-bounded by the contamination rate.
-    ``broadcast_eval=False`` falls back to a hash-partitioned
-    semi-join on the shingle for an atypically large eval side.
     Shingles are compared as 64-bit xxhash values, the same
     output-bounded pattern as :func:`passage_dup_spans`.
     """
-    ev = _eval_shingle_hashes(eval_df, eval_text_col, n,
-                              broadcast_eval)
+    ev = _eval_shingle_hashes(eval_df, eval_text_col, n)
     corpus = df.select(
         F.col(key_col),
         F.explode(shingles_col(F.col(text_col), n)).alias("_s"),
@@ -868,8 +829,7 @@ def contaminated_spans(df: DataFrame, eval_df: DataFrame,
                        key_col: str = "doc_id",
                        text_col: str = "text",
                        eval_text_col: str = "text",
-                       n: int = 13,
-                       broadcast_eval: bool = True) -> DataFrame:
+                       n: int = 13) -> DataFrame:
     """Span-level variant of :func:`decontaminate`: instead of a
     keep/drop verdict per document, return the word spans
     (same schema as :func:`passage_dup_spans`) where the document
@@ -897,8 +857,7 @@ def contaminated_spans(df: DataFrame, eval_df: DataFrame,
     island merge of :func:`passage_dup_spans` — window state bounded
     by single-document length, nothing corpus-sized shuffled beyond
     the flagged positions themselves."""
-    ev = _eval_shingle_hashes(eval_df, eval_text_col, n,
-                              broadcast_eval)
+    ev = _eval_shingle_hashes(eval_df, eval_text_col, n)
     hashed = _positional_shingle_hashes(df, key_col, text_col, n)
     flagged = hashed.join(ev, "h", "left_semi").select("key", "pos")
     return _merge_dup_positions(flagged, key_col, n)

@@ -11,15 +11,11 @@ Stages (each one of the independently-oracle-verified operators):
    With ``--dedup-lines N``, a CCNet-tier duplicate-line scrub
    (`dedup.dedup_lines`) runs on the line-structured extracted text
    first, so boilerplate never reaches the quality stats.
-   The extracted table is cached, repartitioned first to one
-   partition per core when it has fewer (a one-row-group input reads
-   as one partition), so the JVM stages 2-5 run on every core. The
-   Python stages before it keep the input's partitioning: each Python
-   map node in a task holds its own worker. The ingest counts
-   (``warc_records``, ``after_url_gate``, ``input_turns``) are
-   ``DataFrame.observe`` metrics on the plan that fills this cache,
-   read after step 2's count: the ingest runs once, with no count
-   action of its own.
+   The extracted table is repartitioned to one partition per core
+   when it has fewer (a one-row-group input reads as one partition),
+   so the JVM stages 2-5 run on every core. The Python stages before
+   it keep the input's partitioning: each Python map node in a task
+   holds its own worker.
 2. **quality gate** — Gopher rule bundle on the extracted text
    (`textstats.gopher_quality`): word count / mean word length /
    symbol ratio / alpha-word ratio / stopword presence.
@@ -65,6 +61,12 @@ Stages (each one of the independently-oracle-verified operators):
    (`plans.pipeline.write_training_shards`) — or (Iceberg append in
    deployment) + a JSON funnel report (rows in/out per stage — the
    per-stage accounting a curation run must publish).
+
+Every funnel count is a ``DataFrame.observe`` metric, read after the
+write. An observation counts each execution of its node, so each
+sits in the fill of a cache that two readers share, or on the write
+plan; no stage pays a count action of its own except scrub mode's
+distinct ``scrubbed_turns``.
 
 Sandbox default input: sf0.001 documents wrapped as transcripts.
 With ``--warc`` the corpus is first packed into WARC segments and
@@ -165,6 +167,7 @@ def main() -> None:
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args()
 
+    from py4j.protocol import Py4JJavaError
     from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
@@ -182,14 +185,28 @@ def main() -> None:
     from html_parser_spark.sources.transcripts import wrap_documents
 
     t0 = time.monotonic()
-    funnel: dict[str, int | Observation] = {}
+    funnel: dict[str, int | tuple] = {}
 
-    def observed(df, key):
-        """``df`` counting its rows into ``funnel[key]`` as it runs:
-        an Observation, read after the first action over the extract
-        cache (step 2)."""
-        funnel[key] = Observation()
-        return df.observe(funnel[key], F.count(F.lit(1)).alias("n"))
+    def observed(df, key, agg=None):
+        """``df`` counting its rows (or ``agg``) into ``funnel[key]``
+        as it runs; read after the write by :func:`count`."""
+        obs = Observation()
+        agg = (F.count(F.lit(1)) if agg is None else agg).alias("n")
+        funnel[key] = (obs, df, agg)
+        return df.observe(obs, agg)
+
+    def count(v):
+        """The observed count. When AQE cut the first query over the
+        node at an empty stage, Spark completes the observation with an
+        empty row that ``Observation.get`` cannot read: such a node is
+        counted by an action of its own."""
+        if not isinstance(v, tuple):
+            return v
+        obs, df, agg = v
+        try:
+            return obs.get["n"]
+        except Py4JJavaError:
+            return df.agg(agg).first()[0]
 
     tr = wrap_documents(spark, args.input)
     if args.warc:
@@ -227,22 +244,21 @@ def main() -> None:
                       F.lit(None).cast("string").alias("tool"),
                       F.to_timestamp(
                           F.lit("2026-01-01 00:00:00")).alias("ts")))
-    # the ingest counts ride on the plan that fills the extract cache
-    # below, so the ingest runs once
     tr = observed(tr, "input_turns")
     if args.render:
-        # step 6c joins role/tool back from the ingest: cached, it is
-        # filled by the same query as the extract cache, not re-run
+        # read by the extract and by step 6c's role/tool join
         tr = tr.cache()
 
     # 1. extract. Each gate below filters its own output in place,
     # carrying the text through its key columns: (conv_id, turn_idx)
     # is the table's key, so that equals a semi-join back to the
-    # corpus without shuffling it. --c4 also carries the
-    # line-structured extracted_text it judges.
-    keys = ["conv_id", "turn_idx"]
+    # corpus without shuffling it. doc_key (conv_id#turn_idx) is built
+    # once here for the keyed operators and dropped before the write;
+    # --c4 also carries the line-structured extracted_text it judges.
+    keys = ["conv_id", "turn_idx", "doc_key"]
     c4_cols = ["extracted_text"] if args.c4 else []
-    ex0 = extract_text(tr, EXTRACT_CONFIG)
+    ex0 = extract_text(tr, EXTRACT_CONFIG).withColumn(
+        "doc_key", F.concat_ws("#", "conv_id", "turn_idx"))
 
     # 1b. optional CCNet-tier duplicate-line scrub — runs on the
     # line-structured extracted_text (trimmed_text has newlines
@@ -250,23 +266,17 @@ def main() -> None:
     # does not distort word/stopword stats; the survivors are then
     # whitespace-collapsed exactly like trimmed_text.
     if args.dedup_lines:
-        # cache: dedup_lines scans this twice (line frequencies +
-        # reassembly) and the doc_key re-join once more — without the
-        # cache each pass re-runs the fused extract over the corpus
-        keyed0 = (ex0.select("conv_id", "turn_idx", "extracted_text")
-                  .withColumn("doc_key",
-                              F.concat_ws("#", "conv_id", "turn_idx"))
-                  .cache())
-        dl = dedup.dedup_lines(keyed0, key_col="doc_key",
-                               text_col="extracted_text",
-                               min_count=args.dedup_lines).cache()
+        # read by dedup_lines (twice) and by the key re-join below
+        keyed0 = ex0.select(*keys, "extracted_text").cache()
         # rows survive line dedup by design — the informative funnel
-        # number is how many turns had boilerplate lines scrubbed.
-        # Counted before the re-join below, whose partition count is
-        # then planned over the two filled caches.
-        funnel["line_scrubbed_turns"] = dl.filter("n_dup_lines > 0").count()
-        ex = (dl.join(keyed0.select("doc_key", *keys, *c4_cols),
-                      "doc_key")
+        # number is how many turns had boilerplate lines scrubbed;
+        # read by the partition probe below and by the dedup cache fill
+        dl = observed(dedup.dedup_lines(keyed0, key_col="doc_key",
+                                        text_col="extracted_text",
+                                        min_count=args.dedup_lines),
+                      "line_scrubbed_turns",
+                      F.count(F.when(F.col("n_dup_lines") > 0, 1))).cache()
+        ex = (dl.join(keyed0.select(*keys, *c4_cols), "doc_key")
               .select(*keys,
                       F.trim(F.regexp_replace("clean_text", r"\s+",
                                               " ")).alias("text"),
@@ -282,32 +292,27 @@ def main() -> None:
     n_cores = spark.sparkContext.defaultParallelism
     if ex.rdd.getNumPartitions() < n_cores:
         ex = ex.repartition(n_cores)
-    ex = ex.cache()
 
     # 2. quality gate on the EXTRACTED text
     q = textstats.gopher_quality(ex, [*keys, "text", *c4_cols],
                                  min_words=args.min_words)
-    step2 = q.filter("passes_gopher").select(*keys, "text", *c4_cols).cache()
-    funnel["after_quality"] = step2.count()
-    # that action filled the extract cache: the ingest counts are in
-    for k, v in funnel.items():
-        if isinstance(v, Observation):
-            funnel[k] = v.get["n"]
+    step = observed(q.filter("passes_gopher")
+                    .select(*keys, "text", *c4_cols), "after_quality")
 
     # 2b. optional C4 page gate — judged on the LINE-structured
     # as-extracted text (trimmed/collapsed text has no newlines for
     # the line-retention rule to see)
     if args.c4:
-        c4v = textstats.c4_quality(step2, [*keys, "text"],
+        c4v = textstats.c4_quality(step, [*keys, "text"],
                                    text_col="extracted_text")
-        step2 = c4v.filter("passes_c4").select(*keys, "text").cache()
-        funnel["after_c4"] = step2.count()
+        step = observed(c4v.filter("passes_c4").select(*keys, "text"),
+                        "after_c4")
 
-    # 3. language gate (lang stays cached: --mix reads lang_pred)
+    # 3. language gate; lang_pred rides along for --mix
     allow = [x.strip() for x in args.langs.split(",") if x.strip()]
-    lang = textstats.lang_id(step2, [*keys, "text"]).cache()
-    step3 = lang.filter(F.col("lang_pred").isin(allow)).select(*keys, "text")
-    funnel["after_lang"] = step3.count()
+    step = observed(textstats.lang_id(step, [*keys, "text"])
+                    .filter(F.col("lang_pred").isin(allow))
+                    .select(*keys, "text", "lang_pred"), "after_lang")
 
     # 3b. optional CCNet perplexity gate: rank survivors by
     # hashed-n-gram LM score under the target table, keep the
@@ -317,14 +322,13 @@ def main() -> None:
         tgt = spark.read.parquet(args.ppl_terciles)
         keep_buckets = [x.strip() for x in args.ppl_keep.split(",")
                         if x.strip()]
-        keyed_p = step3.withColumn(
-            "doc_key", F.concat_ws("#", "conv_id", "turn_idx"))
-        terc = ccnet_terciles(keyed_p, tgt, key_col="doc_key")
+        # read by ccnet_terciles and by the semi-join
+        step = step.cache()
+        terc = ccnet_terciles(step, tgt, key_col="doc_key")
         ok_p = (terc.filter(F.col("ppl_bucket").isin(keep_buckets))
                 .select("doc_key"))
-        step3 = (keyed_p.join(ok_p, "doc_key", "left_semi")
-                 .drop("doc_key").cache())
-        funnel["after_ppl"] = step3.count()
+        step = observed(step.join(ok_p, "doc_key", "left_semi"),
+                        "after_ppl")
 
     # 4. benchmark decontamination (broadcast eval-shingle probe).
     # drop mode is keyed by conv_id: one leaked turn drops the whole
@@ -333,44 +337,44 @@ def main() -> None:
     if args.eval_table:
         ev = spark.read.parquet(args.eval_table)
         if args.decontaminate_mode == "scrub":
-            keyed3 = step3.withColumn(
-                "doc_key", F.concat_ws("#", "conv_id", "turn_idx"))
+            # read by the span probe, the scrub and the key re-join
+            step = step.cache()
             spans = dedup.contaminated_spans(
-                keyed3, ev, key_col="doc_key", n=args.eval_ngram)
+                step, ev, key_col="doc_key", n=args.eval_ngram)
             scrubbed = (dedup.remove_dup_passages(
-                            keyed3, spans=spans, key_col="doc_key",
+                            step, spans=spans, key_col="doc_key",
                             k=args.eval_ngram)
-                        .join(keyed3.select("doc_key", "conv_id",
-                                            "turn_idx"), "doc_key")
-                        .select("conv_id", "turn_idx",
-                                F.col("scrubbed_text").alias("text"))
-                        .cache())
+                        .join(step.drop("text"), "doc_key")
+                        .select(*keys,
+                                F.col("scrubbed_text").alias("text"),
+                                "lang_pred"))
             # the informative number in scrub mode is how many turns
-            # LOST spans (row count is preserved by construction)
+            # LOST spans (row count is preserved by construction): a
+            # distinct count, which an observation cannot take
             funnel["scrubbed_turns"] = (
                 spans.select("doc_key").distinct().count())
             # a turn that was ENTIRELY a benchmark item scrubs to
             # empty — an empty training row is worse than dropping it
-            step3 = scrubbed.filter(
-                F.length(F.trim("text")) > 0).cache()
+            step = scrubbed.filter(F.length(F.trim("text")) > 0)
         else:
-            step3 = dedup.decontaminate(
-                step3, ev, key_col="conv_id", n=args.eval_ngram).cache()
-        funnel["after_decontaminate"] = step3.count()
+            # read by the shingle probe and by the anti-join
+            step = dedup.decontaminate(
+                step.cache(), ev, key_col="conv_id", n=args.eval_ngram)
+        step = observed(step, "after_decontaminate")
 
-    # 5. near-dup removal (doc key = conv_id#turn_idx)
-    keyed = step3.withColumn(
-        "doc_key", F.concat_ws("#", "conv_id", "turn_idx"))
+    # 5. near-dup removal on doc_key; read by minhash_signatures
+    # (through the components' edge checkpoint) and by the anti-join
+    step = step.cache()
     pairs = dedup.lsh_candidate_pairs(
-        dedup.minhash_signatures(keyed, key_col="doc_key",
+        dedup.minhash_signatures(step, key_col="doc_key",
                                  num_hashes=8),
         key_col="doc_key",
         num_hashes=8, band_size=2, max_bucket=1_000_000)
     dropped = (dedup.dedup_canonical(pairs)
                .filter(~F.col("is_canonical"))
                .select(F.col("id").alias("doc_key")))
-    survivors = keyed.join(dropped, "doc_key", "left_anti").drop("doc_key")
-    funnel["after_dedup"] = survivors.count()
+    survivors = observed(step.join(dropped, "doc_key", "left_anti"),
+                         "after_dedup")
 
     # 6. corpus mixing (deterministic hash-Bernoulli sampling so
     # language strata follow the requested training-mix weights;
@@ -380,15 +384,10 @@ def main() -> None:
         from html_parser_spark.operators.sampling import mix_corpus
         weights = {k.strip(): float(v) for k, v in
                    (kv.split("=") for kv in args.mix.split(","))}
-        survivors = (survivors
-                     .join(lang.select("conv_id", "turn_idx",
-                                       F.col("lang_pred").alias("lang")),
-                           ["conv_id", "turn_idx"])
-                     .cache())
-        survivors = mix_corpus(survivors, "lang", weights,
-                               key_col="text", seed=args.mix_seed) \
-            .drop("lang")   # keep output schema identical to non-mix runs
-        funnel["after_mix"] = survivors.count()
+        # read by mix_corpus' stratum count and by its sample
+        survivors = observed(
+            mix_corpus(survivors.cache(), "lang_pred", weights,
+                       key_col="text", seed=args.mix_seed), "after_mix")
 
     # 6b. DSIR selection (importance resampling toward a target
     # distribution — an alternative/complement to stratum mixing):
@@ -397,14 +396,14 @@ def main() -> None:
     if args.dsir_target:
         from html_parser_spark.operators.sampling import dsir_select
         tgt = spark.read.parquet(args.dsir_target)
-        keyed_s = survivors.withColumn(
-            "doc_key", F.concat_ws("#", "conv_id", "turn_idx"))
-        picked = dsir_select(keyed_s, tgt, k=args.dsir_keep,
+        # read by dsir_select (model total, scores) and the semi-join
+        survivors = survivors.cache()
+        picked = dsir_select(survivors, tgt, k=args.dsir_keep,
                              key_col="doc_key", seed=args.mix_seed)
-        survivors = (keyed_s.join(picked.select("doc_key"),
-                                  "doc_key", "left_semi")
-                     .drop("doc_key"))
-        funnel["after_dsir"] = survivors.count()
+        survivors = observed(survivors.join(picked.select("doc_key"),
+                                            "doc_key", "left_semi"),
+                             "after_dsir")
+    survivors = survivors.select("conv_id", "turn_idx", "text")
 
     # 6c. optional conversation re-assembly: surviving turns join
     # back their role/tool from the source and render as one
@@ -416,8 +415,8 @@ def main() -> None:
         withroles = survivors.join(
             tr.select("conv_id", "turn_idx", "role", "tool"),
             ["conv_id", "turn_idx"], "left")
-        survivors = render_conversations(withroles).cache()
-        funnel["rendered_convs"] = survivors.count()
+        survivors = observed(render_conversations(withroles),
+                             "rendered_convs")
 
     # 7. write + report
     if args.shards:
@@ -436,6 +435,7 @@ def main() -> None:
                               order_cols=order_cols)
     else:
         survivors.write.mode("overwrite").parquet(args.output)
+    funnel = {k: count(v) for k, v in funnel.items()}
     report = {
         "funnel": funnel,
         "kept_ratio": round(

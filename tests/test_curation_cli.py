@@ -13,6 +13,7 @@ import os
 import subprocess
 import sys
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -24,12 +25,34 @@ import tracing  # noqa: E402
 WARC_FUNNEL = {"warc_records": 1500, "input_turns": 500,
                "after_quality": 398, "after_lang": 92, "after_dedup": 87}
 
+GATES_FUNNEL = {"warc_records": 1500, "input_turns": 500,
+                "after_quality": 398, "after_lang": 249, "after_ppl": 166,
+                "after_decontaminate": 159, "after_dedup": 148,
+                "after_mix": 43, "after_dsir": 30}
+SCRUB_FUNNEL = {"warc_records": 1500, "input_turns": 500,
+                "after_quality": 398, "after_lang": 92, "scrubbed_turns": 4,
+                "after_decontaminate": 92, "after_dedup": 87,
+                "rendered_convs": 87}
+
 
 @pytest.fixture(scope="module")
 def docs(tmp_path_factory):
     d = tmp_path_factory.mktemp("curation-docs")
     corpus.write_documents(str(d), corpus.base_texts(500), seed=1)
     return str(d)
+
+
+@pytest.fixture(scope="module")
+def tables(tmp_path_factory):
+    """Eval and target text tables cut from the same fixed corpus, so
+    every optional gate finds overlap and no stage empties the table."""
+    d = tmp_path_factory.mktemp("curation-tables")
+    texts = corpus.base_texts(500)
+    paths = {}
+    for name, rows in (("eval", texts[::25]), ("target", texts[1::7])):
+        paths[name] = str(d / f"{name}.parquet")
+        pq.write_table(pa.table({"text": rows}), paths[name])
+    return paths
 
 
 def _run(docs: str, out_dir, *flags: str) -> tuple[dict, int]:
@@ -79,9 +102,11 @@ def test_curation_url_blocklist_funnel(docs, tmp_path, blocked, funnel_want):
     assert rows == funnel["after_dedup"]
 
 
-def _ingest_queries(docs, tmp_path, monkeypatch, *flags) -> tuple[dict, set]:
+def _map_queries(docs, tmp_path, monkeypatch, field, *flags
+                 ) -> tuple[dict, set]:
     """Run the CLI with an event log; return its funnel and the queries
-    that ran a task updating a metric of the ``warc_records`` map node."""
+    that ran a task updating a metric of a ``MapInArrow`` node whose
+    plan string names ``field`` (an output column of that map)."""
     conf, events = tmp_path / "conf", tmp_path / "events"
     conf.mkdir()
     events.mkdir()
@@ -99,7 +124,7 @@ def _ingest_queries(docs, tmp_path, monkeypatch, *flags) -> tuple[dict, set]:
               for ex in log.executions.values()
               for node in tracing.plan_nodes(ex["plan"])
               if "MapInArrow" in node["nodeName"]
-              and "warc_type" in node.get("simpleString", "")
+              and field in node.get("simpleString", "")
               for m in node.get("metrics", [])}
     assert accums
     return funnel, {job["execution"] for job in log.jobs.values()
@@ -108,10 +133,9 @@ def _ingest_queries(docs, tmp_path, monkeypatch, *flags) -> tuple[dict, set]:
 
 
 def test_curation_ingest_runs_once(docs, tmp_path, monkeypatch):
-    """The WARC record walk runs in one query: the ingest counts ride on
-    the plan that fills the extract cache instead of running their own
-    actions."""
-    funnel, ran = _ingest_queries(docs, tmp_path, monkeypatch)
+    """The WARC record walk runs in one query: the ingest counts are
+    observations on a plan that runs anyway, not actions of their own."""
+    funnel, ran = _map_queries(docs, tmp_path, monkeypatch, "warc_type")
     assert funnel == WARC_FUNNEL
     assert len(ran) == 1, ran
 
@@ -119,7 +143,41 @@ def test_curation_ingest_runs_once(docs, tmp_path, monkeypatch):
 def test_curation_render_ingest_runs_once(docs, tmp_path, monkeypatch):
     """Re-assembling conversations joins role/tool back from the ingest,
     which must not run the WARC record walk a second time."""
-    funnel, ran = _ingest_queries(docs, tmp_path, monkeypatch,
-                                  "--render-conversations")
+    funnel, ran = _map_queries(docs, tmp_path, monkeypatch, "warc_type",
+                               "--render-conversations")
     assert funnel == {**WARC_FUNNEL, "rendered_convs": 87}
     assert len(ran) == 1, ran
+
+
+def test_curation_union_find_runs_once(docs, tmp_path, monkeypatch):
+    """The near-dup graph's one-task union-find (output column
+    ``component``) runs in the write's query only: no stage count
+    re-runs it."""
+    funnel, ran = _map_queries(docs, tmp_path, monkeypatch, "component")
+    assert funnel == WARC_FUNNEL
+    assert len(ran) == 1, ran
+
+
+def test_curation_gates_mix_dsir_funnel(docs, tables, tmp_path):
+    """Drop-mode decontamination, the perplexity gate, a three-language
+    allowlist with a two-language mix, and DSIR selection in one run."""
+    funnel, rows = _run(
+        docs, tmp_path, "--eval-table", tables["eval"],
+        "--ppl-terciles", tables["target"], "--langs", "en,de,fr",
+        "--mix", "en=0.6,fr=0.4", "--dsir-target", tables["target"],
+        "--dsir-keep", "30")
+    assert list(funnel.items()) == list(GATES_FUNNEL.items())
+    assert rows == funnel["after_dsir"]
+
+
+def test_curation_scrub_render_shards_funnel(docs, tables, tmp_path):
+    """Scrub-mode decontamination, rendered conversations and three
+    content-hash shards in one run."""
+    funnel, rows = _run(
+        docs, tmp_path, "--eval-table", tables["eval"],
+        "--decontaminate-mode", "scrub", "--render-conversations",
+        "--shards", "3")
+    assert list(funnel.items()) == list(SCRUB_FUNNEL.items())
+    assert rows == funnel["rendered_convs"]
+    shards = {n for n in os.listdir(tmp_path / "out") if "=" in n}
+    assert shards == {"shard=0", "shard=1", "shard=2"}
