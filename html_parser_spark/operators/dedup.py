@@ -727,7 +727,7 @@ def _eval_shingle_hashes(eval_df: DataFrame, text_col: str,
                          n: int) -> DataFrame:
     """(h): DISTINCT 64-bit hashes of the eval table's word
     ``n``-shingles, broadcast (eval sets are megabytes against a
-    100 TB corpus).  Shared by drop-mode and span-mode
+    100 TB corpus).  Shared by drop-mode, span-mode and streaming
     decontamination."""
     ev = (eval_df
           .select(F.explode(

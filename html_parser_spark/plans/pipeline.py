@@ -23,10 +23,11 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,6 +86,28 @@ def partition_metrics(df: DataFrame, batch_id: int = 0,
         })
 
     return df.mapInPandas(run, LINEAGE_SCHEMA)
+
+
+def observed(df: DataFrame, agg: Column | None = None
+             ) -> tuple[DataFrame, Callable[[], int]]:
+    """``df`` counting its rows (or ``agg``) as it runs, and a reader of
+    that count for after the action. An observation counts every
+    execution of its node in a query: put it in a cache's fill or on
+    the action's plan, never under an uncached plan that two readers
+    share. When AQE cut the first query over the node at an empty
+    stage, Spark completes the observation with an empty row that
+    ``Observation.get`` cannot read: the reader then counts the node
+    by an action of its own."""
+    obs = Observation()
+    agg = (F.count(F.lit(1)) if agg is None else agg).alias("n")
+
+    def read() -> int:
+        try:
+            return obs.get["n"]
+        except Py4JJavaError:
+            return df.agg(agg).first()[0]
+
+    return df.observe(obs, agg), read
 
 
 def write_bucketed(df: DataFrame, table: str, n_buckets: int = 64,

@@ -13,7 +13,7 @@ so it takes a stream DataFrame as it is — ``extract_text(stream_df)``
 stateful operator). This module holds only what a stream needs
 beyond that: the file-drop source, the stream forms of
 decontamination and exact dedup, sessionization, the windowed
-rollup and the sinks.
+rollup and the incremental-dedup sink.
 
 For conversation-level rollups (e.g. turns per conv per window) we
 add the standard watermark + window aggregation, which IS stateful —
@@ -73,11 +73,11 @@ def decontaminate_stream(stream_df: DataFrame, eval_df: DataFrame,
     big for that is too big for the batch broadcast too). Pure JVM,
     append-mode-safe, identical keep/drop decisions to the batch
     operator."""
-    from html_parser_spark.operators.dedup import shingles_col
+    from html_parser_spark.operators.dedup import (_eval_shingle_hashes,
+                                                   shingles_col)
 
-    ev = [r.h for r in (eval_df.select(
-        F.explode(shingles_col(F.col(eval_text_col), n)).alias("_s"))
-        .select(F.xxhash64("_s").alias("h")).distinct().collect())]
+    ev = [r.h for r in
+          _eval_shingle_hashes(eval_df, eval_text_col, n).collect()]
     if not ev:
         return stream_df
     row_hashes = F.transform(
@@ -225,16 +225,6 @@ def sessionize_stream(stream_df: DataFrame, gap_seconds: int = 300,
             fn, SESSION_SCHEMA, _SESSION_STATE, "append",
             "EventTimeTimeout")
     )
-
-
-def write_stream_parquet(df: DataFrame, out_dir: str,
-                         checkpoint_dir: str, mode: str = "append"):
-    """Sink with exactly-once file semantics via the streaming
-    checkpoint (offsets + commit log — the streaming twin of
-    plans.pipeline's batch lineage table)."""
-    return (df.writeStream.outputMode(mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .format("parquet").option("path", out_dir))
 
 
 def dedup_epoch(bdf: DataFrame, batch_id: int, store_dir: str,

@@ -64,7 +64,8 @@ def main() -> None:
                          "a TrustRank column beside PageRank")
     ap.add_argument("--blocked-domains", default="",
                     help="comma-separated URL-gate domain blocklist")
-    ap.add_argument("--cpus", type=int, default=8)
+    ap.add_argument("--cpus", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -84,6 +85,7 @@ def main() -> None:
     from html_parser_spark.operators.extract import links
     from html_parser_spark.operators.linkgraph import (host_edges,
                                                        pagerank)
+    from html_parser_spark.plans.pipeline import observed
     from html_parser_spark.sources.transcripts import wrap_documents
 
     # ---- stage 1: link graph + ranks from the corpus itself.
@@ -93,7 +95,7 @@ def main() -> None:
     # extracted links feed the graph instead of being dropped as
     # hostless. Each page also declares one cross-host link to the
     # next host (the deterministic synthesis stand-in for the real
-    # web's cross-site edges).
+    # web's cross-site edges), exploded beside it from the same pass.
     docs = wrap_documents(spark, args.input)
     src_host = F.concat(
         F.lit("h"), (F.col("conv_id").cast("long") % 7).cast("string"),
@@ -105,20 +107,18 @@ def main() -> None:
         F.concat(F.lit("https://"), src_host,
                  F.when(F.col("url").startswith("/"), F.col("url"))
                  .otherwise(F.concat(F.lit("/"), F.col("url")))))
-    lk = raw.select(src_host.alias("src_host"),
-                    resolved.alias("url"))
-    nxt = raw.select(
-        src_host.alias("src_host"),
-        F.concat(F.lit("https://h"),
-                 ((F.col("conv_id").cast("long") + 1) % 7)
-                 .cast("string"),
-                 F.lit(".ex.com/")).alias("url"))
+    nxt = F.concat(F.lit("https://h"),
+                   ((F.col("conv_id").cast("long") + 1) % 7)
+                   .cast("string"),
+                   F.lit(".ex.com/"))
     # distinct: a URL discovered N times is still ONE fetch — without
     # this, duplicates each get their own schedule row and the same
-    # URL occupies many waves
-    lk = lk.unionByName(nxt).distinct()
-    # edges feeds two pagerank runs + the sitemap synthesis: persist
-    # so the Arrow extraction fan-out runs once, not per consumer
+    # URL occupies many waves. Read by host_edges and by the sitemap
+    # synthesis: cached so the links map runs once.
+    lk = (raw.select(src_host.alias("src_host"),
+                     F.explode(F.array(resolved, nxt)).alias("url"))
+          .distinct().cache())
+    # read by each pagerank run's nodes, out-degrees and edge join
     edges = host_edges(lk).persist()
     ranks = pagerank(edges, iters=args.iters)
     if args.trust_seeds:
@@ -156,10 +156,10 @@ def main() -> None:
     # ---- stages 2-4: admission -> priority -> politeness waves
     blocked = tuple(d.strip() for d in args.blocked_domains.split(",")
                     if d.strip())
-    # frontier feeds the schedule AND the blocked-count report row:
-    # persist so extraction/admission run once, not per action
-    frontier = crawl_frontier(pages, robots,
-                              blocked_domains=blocked).persist()
+    # blocked URLs are counted on the write's plan, their one reader
+    frontier, n_blocked = observed(
+        crawl_frontier(pages, robots, blocked_domains=blocked),
+        F.count(F.when(~F.col("frontier"), 1)))
     sched = frontier_schedule(
         frontier_priority(frontier, ranks), per_wave=args.per_wave)
     if trust is not None:
@@ -172,15 +172,13 @@ def main() -> None:
     sched.write.mode("overwrite").partitionBy("wave") \
         .parquet(args.output)
 
-    out = spark.read.parquet(args.output)
-    n_urls = out.count()
-    n_waves = out.agg(F.max("wave")).first()[0]
-    n_blocked = frontier.filter(~F.col("frontier")).count()
     # politeness invariant, checked on the WRITTEN data
-    worst = (out.groupBy("wave", "url_host").count()
-             .agg(F.max("count")).first()[0])
-    report = {"urls_scheduled": n_urls,
-              "robots_or_gate_blocked": n_blocked,
+    n_urls, n_waves, worst = (
+        spark.read.parquet(args.output)
+        .groupBy("wave", "url_host").agg(F.count("*").alias("n"))
+        .agg(F.sum("n"), F.max("wave"), F.max("n")).first())
+    report = {"urls_scheduled": int(n_urls or 0),
+              "robots_or_gate_blocked": n_blocked(),
               "waves": int(n_waves) + 1 if n_waves is not None else 0,
               "max_per_host_per_wave": int(worst or 0),
               "per_wave_limit": args.per_wave,

@@ -13,9 +13,9 @@ Stages (each one of the independently-oracle-verified operators):
    first, so boilerplate never reaches the quality stats.
    The extracted table is repartitioned to one partition per core
    when it has fewer (a one-row-group input reads as one partition),
-   so the JVM stages 2-5 run on every core. The Python stages before
-   it keep the input's partitioning: each Python map node in a task
-   holds its own worker.
+   and always after the line scrub, so the JVM stages 2-5 run on
+   every core. The Python stages before it keep the input's
+   partitioning: each Python map node in a task holds its own worker.
 2. **quality gate** — Gopher rule bundle on the extracted text
    (`textstats.gopher_quality`): word count / mean word length /
    symbol ratio / alpha-word ratio / stopword presence.
@@ -167,8 +167,7 @@ def main() -> None:
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args()
 
-    from py4j.protocol import Py4JJavaError
-    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     spark = (SparkSession.builder.master(f"local[{args.cpus}]")
@@ -182,31 +181,15 @@ def main() -> None:
     from html_parser_spark.config import EXTRACT_CONFIG
     from html_parser_spark.operators import dedup, textstats
     from html_parser_spark.operators.extract import extract_text
+    from html_parser_spark.plans import pipeline
     from html_parser_spark.sources.transcripts import wrap_documents
 
     t0 = time.monotonic()
-    funnel: dict[str, int | tuple] = {}
+    funnel: dict = {}     # key -> count, or its reader until the write
 
-    def observed(df, key, agg=None):
-        """``df`` counting its rows (or ``agg``) into ``funnel[key]``
-        as it runs; read after the write by :func:`count`."""
-        obs = Observation()
-        agg = (F.count(F.lit(1)) if agg is None else agg).alias("n")
-        funnel[key] = (obs, df, agg)
-        return df.observe(obs, agg)
-
-    def count(v):
-        """The observed count. When AQE cut the first query over the
-        node at an empty stage, Spark completes the observation with an
-        empty row that ``Observation.get`` cannot read: such a node is
-        counted by an action of its own."""
-        if not isinstance(v, tuple):
-            return v
-        obs, df, agg = v
-        try:
-            return obs.get["n"]
-        except Py4JJavaError:
-            return df.agg(agg).first()[0]
+    def counted(df, key, agg=None):
+        df, funnel[key] = pipeline.observed(df, agg)
+        return df
 
     tr = wrap_documents(spark, args.input)
     if args.warc:
@@ -217,7 +200,7 @@ def main() -> None:
         # directly). Only 200 text/html responses proceed.
         from html_parser_spark.sources.warc import (
             synth_warc, warc_records)
-        recs = observed(warc_records(synth_warc(tr)), "warc_records")
+        recs = counted(warc_records(synth_warc(tr)), "warc_records")
         resp = recs.filter((F.col("warc_type") == "response")
                            & (F.col("http_status") == 200)
                            & F.col("content_type")
@@ -234,7 +217,7 @@ def main() -> None:
                     .filter("keep_url")
                     .drop("host", "blocked_domain", "blocked_pattern",
                           "soft_score", "keep_url"))
-            resp = observed(resp, "after_url_gate")
+            resp = counted(resp, "after_url_gate")
         tr = (resp
               .select(F.col("doc_id").cast("string")
                       .alias("conv_id"),
@@ -244,7 +227,7 @@ def main() -> None:
                       F.lit(None).cast("string").alias("tool"),
                       F.to_timestamp(
                           F.lit("2026-01-01 00:00:00")).alias("ts")))
-    tr = observed(tr, "input_turns")
+    tr = counted(tr, "input_turns")
     if args.render:
         # read by the extract and by step 6c's role/tool join
         tr = tr.cache()
@@ -269,13 +252,12 @@ def main() -> None:
         # read by dedup_lines (twice) and by the key re-join below
         keyed0 = ex0.select(*keys, "extracted_text").cache()
         # rows survive line dedup by design — the informative funnel
-        # number is how many turns had boilerplate lines scrubbed;
-        # read by the partition probe below and by the dedup cache fill
-        dl = observed(dedup.dedup_lines(keyed0, key_col="doc_key",
-                                        text_col="extracted_text",
-                                        min_count=args.dedup_lines),
-                      "line_scrubbed_turns",
-                      F.count(F.when(F.col("n_dup_lines") > 0, 1))).cache()
+        # number is how many turns had boilerplate lines scrubbed
+        dl = counted(dedup.dedup_lines(keyed0, key_col="doc_key",
+                                       text_col="extracted_text",
+                                       min_count=args.dedup_lines),
+                     "line_scrubbed_turns",
+                     F.count(F.when(F.col("n_dup_lines") > 0, 1)))
         ex = (dl.join(keyed0.select(*keys, *c4_cols), "doc_key")
               .select(*keys,
                       F.trim(F.regexp_replace("clean_text", r"\s+",
@@ -288,16 +270,19 @@ def main() -> None:
     # fewer partitions than cores, and every narrow gate below would
     # inherit that. Split here, after the Python stages: each Python
     # map node in a task holds its own worker, so splitting the input
-    # would multiply workers, not just tasks.
+    # would multiply workers, not just tasks. The line-scrub re-join
+    # is split without asking: AQE never gives it more partitions than
+    # cores, and getNumPartitions() would run its shuffles outside any
+    # query.
     n_cores = spark.sparkContext.defaultParallelism
-    if ex.rdd.getNumPartitions() < n_cores:
+    if args.dedup_lines or ex.rdd.getNumPartitions() < n_cores:
         ex = ex.repartition(n_cores)
 
     # 2. quality gate on the EXTRACTED text
     q = textstats.gopher_quality(ex, [*keys, "text", *c4_cols],
                                  min_words=args.min_words)
-    step = observed(q.filter("passes_gopher")
-                    .select(*keys, "text", *c4_cols), "after_quality")
+    step = counted(q.filter("passes_gopher")
+                   .select(*keys, "text", *c4_cols), "after_quality")
 
     # 2b. optional C4 page gate — judged on the LINE-structured
     # as-extracted text (trimmed/collapsed text has no newlines for
@@ -305,14 +290,14 @@ def main() -> None:
     if args.c4:
         c4v = textstats.c4_quality(step, [*keys, "text"],
                                    text_col="extracted_text")
-        step = observed(c4v.filter("passes_c4").select(*keys, "text"),
-                        "after_c4")
+        step = counted(c4v.filter("passes_c4").select(*keys, "text"),
+                       "after_c4")
 
     # 3. language gate; lang_pred rides along for --mix
     allow = [x.strip() for x in args.langs.split(",") if x.strip()]
-    step = observed(textstats.lang_id(step, [*keys, "text"])
-                    .filter(F.col("lang_pred").isin(allow))
-                    .select(*keys, "text", "lang_pred"), "after_lang")
+    step = counted(textstats.lang_id(step, [*keys, "text"])
+                   .filter(F.col("lang_pred").isin(allow))
+                   .select(*keys, "text", "lang_pred"), "after_lang")
 
     # 3b. optional CCNet perplexity gate: rank survivors by
     # hashed-n-gram LM score under the target table, keep the
@@ -327,8 +312,8 @@ def main() -> None:
         terc = ccnet_terciles(step, tgt, key_col="doc_key")
         ok_p = (terc.filter(F.col("ppl_bucket").isin(keep_buckets))
                 .select("doc_key"))
-        step = observed(step.join(ok_p, "doc_key", "left_semi"),
-                        "after_ppl")
+        step = counted(step.join(ok_p, "doc_key", "left_semi"),
+                       "after_ppl")
 
     # 4. benchmark decontamination (broadcast eval-shingle probe).
     # drop mode is keyed by conv_id: one leaked turn drops the whole
@@ -360,7 +345,7 @@ def main() -> None:
             # read by the shingle probe and by the anti-join
             step = dedup.decontaminate(
                 step.cache(), ev, key_col="conv_id", n=args.eval_ngram)
-        step = observed(step, "after_decontaminate")
+        step = counted(step, "after_decontaminate")
 
     # 5. near-dup removal on doc_key; read by minhash_signatures
     # (through the components' edge checkpoint) and by the anti-join
@@ -373,8 +358,8 @@ def main() -> None:
     dropped = (dedup.dedup_canonical(pairs)
                .filter(~F.col("is_canonical"))
                .select(F.col("id").alias("doc_key")))
-    survivors = observed(step.join(dropped, "doc_key", "left_anti"),
-                         "after_dedup")
+    survivors = counted(step.join(dropped, "doc_key", "left_anti"),
+                        "after_dedup")
 
     # 6. corpus mixing (deterministic hash-Bernoulli sampling so
     # language strata follow the requested training-mix weights;
@@ -385,7 +370,7 @@ def main() -> None:
         weights = {k.strip(): float(v) for k, v in
                    (kv.split("=") for kv in args.mix.split(","))}
         # read by mix_corpus' stratum count and by its sample
-        survivors = observed(
+        survivors = counted(
             mix_corpus(survivors.cache(), "lang_pred", weights,
                        key_col="text", seed=args.mix_seed), "after_mix")
 
@@ -400,9 +385,9 @@ def main() -> None:
         survivors = survivors.cache()
         picked = dsir_select(survivors, tgt, k=args.dsir_keep,
                              key_col="doc_key", seed=args.mix_seed)
-        survivors = observed(survivors.join(picked.select("doc_key"),
-                                            "doc_key", "left_semi"),
-                             "after_dsir")
+        survivors = counted(survivors.join(picked.select("doc_key"),
+                                           "doc_key", "left_semi"),
+                            "after_dsir")
     survivors = survivors.select("conv_id", "turn_idx", "text")
 
     # 6c. optional conversation re-assembly: surviving turns join
@@ -415,8 +400,8 @@ def main() -> None:
         withroles = survivors.join(
             tr.select("conv_id", "turn_idx", "role", "tool"),
             ["conv_id", "turn_idx"], "left")
-        survivors = observed(render_conversations(withroles),
-                             "rendered_convs")
+        survivors = counted(render_conversations(withroles),
+                            "rendered_convs")
 
     # 7. write + report
     if args.shards:
@@ -435,7 +420,7 @@ def main() -> None:
                               order_cols=order_cols)
     else:
         survivors.write.mode("overwrite").parquet(args.output)
-    funnel = {k: count(v) for k, v in funnel.items()}
+    funnel = {k: v() if callable(v) else v for k, v in funnel.items()}
     report = {
         "funnel": funnel,
         "kept_ratio": round(

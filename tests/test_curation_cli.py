@@ -20,7 +20,8 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 import corpus  # noqa: E402
-import tracing  # noqa: E402
+
+from tests.helpers import map_stages  # noqa: E402
 
 WARC_FUNNEL = {"warc_records": 1500, "input_turns": 500,
                "after_quality": 398, "after_lang": 92, "after_dedup": 87}
@@ -29,6 +30,9 @@ GATES_FUNNEL = {"warc_records": 1500, "input_turns": 500,
                 "after_quality": 398, "after_lang": 249, "after_ppl": 166,
                 "after_decontaminate": 159, "after_dedup": 148,
                 "after_mix": 43, "after_dsir": 30}
+FOOTER_FUNNEL = {"warc_records": 1500, "input_turns": 500,
+                 "line_scrubbed_turns": 125, "after_quality": 398,
+                 "after_lang": 94, "after_dedup": 89}
 SCRUB_FUNNEL = {"warc_records": 1500, "input_turns": 500,
                 "after_quality": 398, "after_lang": 92, "scrubbed_turns": 4,
                 "after_decontaminate": 92, "after_dedup": 87,
@@ -39,6 +43,18 @@ SCRUB_FUNNEL = {"warc_records": 1500, "input_turns": 500,
 def docs(tmp_path_factory):
     d = tmp_path_factory.mktemp("curation-docs")
     corpus.write_documents(str(d), corpus.base_texts(500), seed=1)
+    return str(d)
+
+
+@pytest.fixture(scope="module")
+def footer_docs(tmp_path_factory):
+    """The same corpus with one boilerplate footer line on every 4th
+    text, so ``--dedup-lines 2`` has lines to scrub."""
+    d = tmp_path_factory.mktemp("curation-footer-docs")
+    texts = [t + "\nCopyright 2026 all rights reserved by the example site"
+             if i % 4 == 0 else t
+             for i, t in enumerate(corpus.base_texts(500))]
+    corpus.write_documents(str(d), texts, seed=1)
     return str(d)
 
 
@@ -104,32 +120,12 @@ def test_curation_url_blocklist_funnel(docs, tmp_path, blocked, funnel_want):
 
 def _map_queries(docs, tmp_path, monkeypatch, field, *flags
                  ) -> tuple[dict, set]:
-    """Run the CLI with an event log; return its funnel and the queries
-    that ran a task updating a metric of a ``MapInArrow`` node whose
-    plan string names ``field`` (an output column of that map)."""
-    conf, events = tmp_path / "conf", tmp_path / "events"
-    conf.mkdir()
-    events.mkdir()
-    (conf / "spark-defaults.conf").write_text(
-        "spark.eventLog.enabled true\n"
-        f"spark.eventLog.dir file://{events}\n"
-        "spark.eventLog.rolling.enabled false\n"
-        "spark.eventLog.compress false\n")
-    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
-    funnel, _ = _run(docs, tmp_path, *flags)
-    (name,) = os.listdir(events)
-    with open(events / name) as fh:
-        log = tracing.parse_event_log(fh)
-    accums = {m["accumulatorId"]
-              for ex in log.executions.values()
-              for node in tracing.plan_nodes(ex["plan"])
-              if "MapInArrow" in node["nodeName"]
-              and field in node.get("simpleString", "")
-              for m in node.get("metrics", [])}
-    assert accums
-    return funnel, {job["execution"] for job in log.jobs.values()
-                    for sid in job["stages"]
-                    if sid in log.stages and log.stages[sid]["accums"] & accums}
+    """The CLI's funnel, and the queries whose stages ran the map with
+    output column ``field`` (see :func:`tests.helpers.map_stages`)."""
+    funnel, stages = map_stages(
+        tmp_path, monkeypatch, field,
+        lambda: _run(docs, tmp_path, *flags)[0])
+    return funnel, set(stages.values())
 
 
 def test_curation_ingest_runs_once(docs, tmp_path, monkeypatch):
@@ -156,6 +152,20 @@ def test_curation_union_find_runs_once(docs, tmp_path, monkeypatch):
     funnel, ran = _map_queries(docs, tmp_path, monkeypatch, "component")
     assert funnel == WARC_FUNNEL
     assert len(ran) == 1, ran
+
+
+def test_curation_dedup_lines_footer_funnel(footer_docs, tmp_path,
+                                            monkeypatch):
+    """The line scrub on a corpus with repeated footers: every footer
+    line is scrubbed, and the extract map (output column
+    ``extracted_text``) runs only inside queries: nothing probes the
+    plan to pick the split after the scrub."""
+    (funnel, rows), stages = map_stages(
+        tmp_path, monkeypatch, "extracted_text",
+        lambda: _run(footer_docs, tmp_path, "--dedup-lines", "2"))
+    assert list(funnel.items()) == list(FOOTER_FUNNEL.items())
+    assert rows == funnel["after_dedup"]
+    assert None not in stages.values(), stages
 
 
 def test_curation_gates_mix_dsir_funnel(docs, tables, tmp_path):
