@@ -48,8 +48,9 @@ chain of ``replace`` calls per word inside higher-order functions —
 a shuffle-free, Python-free map at any corpus size. HOF lambdas are
 CodegenFallback expressions (interpreted bodies, fixed-size
 generated code), so growing ``num_merges`` cannot blow the Janino
-64 KB method limit the way an inlined per-merge CASE chain would —
-the same plan-size reasoning as ``textstats.lang_id``.
+64 KB method limit the way an inlined per-merge CASE chain would:
+the plan's size is fixed by the literal's, not by a chain of one
+expression per merge.
 
 No counterpart in the reference (gisle/html-parser is a parser, not
 a training-data pipeline); the algorithm is the public Sennrich

@@ -20,7 +20,8 @@ crawl) sample, then kept documents by classifier score (Brown et al.
 * scoring — a map-only JVM stage: the weight vector ships as ONE
   typed array literal probed with ``element_at`` inside an
   ``aggregate`` higher-order function, so generated code is O(1) in
-  bucket count (the lang_id Janino lesson applied from the start).
+  bucket count (one CASE or term per bucket would blow Janino's 64 KB
+  method limit and drop the stage to interpreted eval).
 
 Scale notes (100 TB): train on a sample (the standard practice — the
 positive set is curated data, megabytes to gigabytes; pass a

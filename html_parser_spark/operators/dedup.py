@@ -65,14 +65,21 @@ def exact_dedup(df: DataFrame, key_col: str = "doc_id",
 
 
 def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles of ``text`` (n=3 default)."""
-    w = words_col(text)
-    idx = F.sequence(F.lit(1), F.size(w) - (n - 1))
-    make = lambda i: F.concat_ws(
-        " ", *[F.element_at(w, i + j) for j in range(n)])
-    return F.when(
-        F.size(w) >= n, F.array_distinct(F.transform(idx, make))
-    ).otherwise(F.array().cast("array<string>"))
+    """Distinct n-word shingles of ``text`` (n=3 default).
+
+    The words array is bound once, as the variable of a one-element
+    ``transform``: written inline, each of its ``n + 2`` uses would
+    split the whole text again."""
+    def from_words(w: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.size(w) - (n - 1))
+        make = lambda i: F.concat_ws(
+            " ", *[F.element_at(w, i + j) for j in range(n)])
+        return F.when(
+            F.size(w) >= n, F.array_distinct(F.transform(idx, make))
+        ).otherwise(F.array().cast("array<string>"))
+
+    return F.element_at(F.transform(F.array(words_col(text)), from_words),
+                        1)
 
 
 def shingle_rows(df: DataFrame, key_col: str, text_col: str,

@@ -100,8 +100,7 @@ def stratified_sample(
     array literals probed with ``array_position`` — not a per-stratum
     CASE chain, which at a languages x sources stratification
     (thousands of strata) would blow Janino's 64 KB generated-method
-    limit and drop the whole stage to interpreted eval (the same
-    failure mode documented on ``textstats.lang_id``); two literal
+    limit and drop the whole stage to interpreted eval; two literal
     nodes keep the plan O(1) in stratum count.  Never a join.
     """
     u = uniform_hash_col(F.col(key_col), seed)

@@ -1,8 +1,12 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All JVM-side (`pyspark.sql.functions` only — no Python UDFs): these
-run inside whole-stage codegen, so at 100 TB the cost is one columnar
-scan + narrow projections; no shuffle, no Python worker round-trip.
+Most are JVM-side (`pyspark.sql.functions` only): they run inside
+whole-stage codegen, so at 100 TB the cost is one columnar scan +
+narrow projections; no shuffle, no Python worker round-trip. Two run
+Python over Arrow: :func:`lang_id`, whose ~110 substring counts per
+row are cheaper as ``str.count`` than as interpreted higher-order
+functions, and :func:`normalize_text` (Unicode normalization has no
+JVM built-in).
 
 These complement the HTML extraction surface (SURVEY.md §2.5): in a
 training-data pipeline the extracted text flows straight into
@@ -16,6 +20,9 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from html_parser_spark.arrowmap import arrow_map
 
 #: regex used for both Spark and the DuckDB oracle — BPE-ish token
 #: classes: alpha runs, digit runs, single punctuation marks.
@@ -151,6 +158,35 @@ CJK_SCRIPT_RANGES: tuple[tuple[str, str], ...] = (
 )
 
 
+#: the code points whose lowercase Spark's ``lower`` (ICU) and
+#: Python 3.11's ``str.lower`` disagree on, found by lowering every
+#: non-surrogate code point through both: all 27 are letters newer
+#: than Python 3.11's Unicode tables. Applied after ``str.lower``; a
+#: no-op on a Python that already lowers them.
+_JVM_LOWER = {0x1C89: 0x1C8A, 0xA7CB: 0x0264, 0xA7CC: 0xA7CD,
+              0xA7DA: 0xA7DB, 0xA7DC: 0x019B,
+              **{c: c + 0x20 for c in range(0x10D50, 0x10D66)}}
+
+_LANGS = tuple(LANG_TRIGRAMS)
+_CJK_SCRIPTS = tuple((lang, re.compile(f"[{rng}]"))
+                     for lang, rng in CJK_SCRIPT_RANGES)
+
+
+def _lang_row(text: str) -> tuple[tuple[str, int, int]]:
+    """One row's (lang_pred, lang_score, lang_margin): see
+    :func:`lang_id`."""
+    t = text.lower().translate(_JVM_LOWER)
+    scores = [sum(t.count(g) for g in grams)
+              for grams in LANG_TRIGRAMS.values()]
+    best = max(scores)
+    if best > 0:
+        pred = _LANGS[scores.index(best)]
+    else:
+        pred = next((lang for lang, rx in _CJK_SCRIPTS if rx.search(t)),
+                    "other")
+    return ((pred, best, best - sorted(scores)[-2]),)
+
+
 def lang_id(df: DataFrame, key_cols: list[str],
             text_col: str = "text") -> DataFrame:
     """Char-gram-profile language ID over every ``LANG_TRIGRAMS``
@@ -158,78 +194,35 @@ def lang_id(df: DataFrame, key_cols: list[str],
     on bigrams), with a ``CJK_SCRIPT_RANGES`` codepoint fallback when
     no profile gram occurs, and 'other' when the fallback misses too.
 
-    Per language: score = Σ_gram occurrences in the lowercased text,
-    each count computed as (len - len(replace(t, g))) / len(g) —
-    plain string ops, no regex in the scoring, so any engine
-    reproduces it exactly. Prediction = argmax, ties broken by
-    profile order; zero-score text falls back to script ranges
-    (kana -> ja, hangul -> ko, Han -> zh — Han last because kanji /
-    hanja share it). Pure JVM, one codegen stage, shuffle-free — at
-    100 TB this is a narrow map over the text column, and extending
-    coverage is adding profile rows, not changing the operator shape.
+    Per language: score = Σ_gram non-overlapping occurrences in the
+    lowercased text (``str.count``; the DuckDB oracle computes the
+    same count as (len - len(replace(t, g))) / len(g)). Prediction =
+    argmax, ties broken by profile order; zero-score text falls back
+    to script ranges (kana -> ja, hangul -> ko, Han -> zh — Han last
+    because kanji / hanja share it). Lowercasing is Spark's ``lower``
+    per code point (``_JVM_LOWER`` fills in what Python's tables
+    lack).
 
-    Codegen-size note (a real 100 TB detail): the obvious
-    per-language CASE-chain argmax duplicates every per-gram
-    length/replace term once per language, and when a downstream
-    filter on lang_pred is pushed through the projection Catalyst
-    inlines the whole chain into the predicate — the generated method
-    blows Janino's 64 KB limit and the ENTIRE stage falls back to
-    interpreted eval (measured: 16 s for 108 rows in the composed
-    curation plan). Even a flat scores := array(...) of per-gram
-    terms still exceeds the limit once the plan inlines 2-3 copies.
-    So the gram table itself is data: a literal array<array<string>>
-    scanned with transform/aggregate higher-order functions. HOFs are
-    CodegenFallback expressions — the generated code is a fixed-size
-    call regardless of profile count, the surrounding stage stays
-    whole-stage-compiled, and extending language coverage cannot
-    regress the plan. Scoring itself runs interpreted, the right
-    trade at any profile size. The scores array is materialized in
-    its own projection (same two-projection split as
-    :func:`gopher_quality`): CollapseProject refuses to merge because
-    the non-cheap array is referenced several times, so the ~100 gram
-    counts run ONCE per row and argmax/best read a plain attribute.
+    One :func:`~html_parser_spark.arrowmap.arrow_map` pass, shuffle-
+    free: a filter on ``lang_pred`` cannot be pushed below the map,
+    so every row is scored once however the plan above composes, and
+    extending coverage is adding profile rows, not changing the
+    operator shape.
 
     Null text classifies as 'other' with score 0 (treated as empty).
 
     ``lang_margin`` is the curation-gate confidence: top1 − top2
     profile score. Routing on it ("margin < k -> send to a heavier
-    classifier") beats hard-labeling uncertain rows; scores are exact
-    integers by construction (each replace removes whole grams), so
-    the margin is exact too. Zero-score text (the CJK-fallback path)
-    has margin 0 naturally — all profile scores are 0 there.
+    classifier") beats hard-labeling uncertain rows; scores and
+    margin are exact integers. Zero-score text (the CJK-fallback
+    path) has margin 0 naturally — all profile scores are 0 there.
     """
-    t = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    grams = F.array(*[F.array(*[F.lit(g) for g in tris])
-                      for tris in LANG_TRIGRAMS.values()])
-    scored = df.select(
-        *key_cols,
-        t.alias("_lang_t"),
-        F.transform(grams, lambda tris: F.aggregate(
-            tris, F.lit(0.0),
-            lambda acc, g: acc
-            + (F.length(t) - F.length(F.replace(t, g))) / F.length(g)
-        )).alias("_lang_scores"))
-    scores = F.col("_lang_scores")
-    lt = F.col("_lang_t")
-    best = F.array_max(scores)
-    # 1-based index of the FIRST max -> profile-order tie-break
-    picked = F.element_at(
-        F.array(*[F.lit(lang) for lang in LANG_TRIGRAMS]),
-        F.array_position(scores, best).cast("int"))
-    fallback = None
-    for lang, rng in reversed(CJK_SCRIPT_RANGES):
-        hit = F.length(F.regexp_replace(lt, f"[^{rng}]", "")) > 0
-        fallback = F.when(hit, F.lit(lang)).otherwise(
-            F.lit("other") if fallback is None else fallback)
-    pred = F.when(best <= 0, fallback).otherwise(
-        F.coalesce(picked, F.lit("other")))
-    second = F.element_at(F.array_sort(scores), -2)
-    return scored.select(
-        *key_cols,
-        pred.alias("lang_pred"),
-        best.cast("long").alias("lang_score"),
-        (best - second).cast("long").alias("lang_margin"),
-    )
+    schema = T.StructType([df.schema[k] for k in key_cols] + [
+        T.StructField("lang_pred", T.StringType()),
+        T.StructField("lang_score", T.LongType()),
+        T.StructField("lang_margin", T.LongType()),
+    ])
+    return arrow_map(df, key_cols, text_col, schema, _lang_row)
 
 
 def gopher_quality(df: DataFrame, key_cols: list[str],

@@ -7,16 +7,19 @@ Usage: python scripts/check_oracles.py [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# import the checkout this script lives in: a second copy of the repo
+# checks its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-import os
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()

@@ -154,6 +154,16 @@ def test_curation_union_find_runs_once(docs, tmp_path, monkeypatch):
     assert len(ran) == 1, ran
 
 
+def test_curation_lang_map_runs_once(docs, tmp_path, monkeypatch):
+    """The language gate (output column ``lang_pred``) scores each row
+    in one Arrow map stage, inside a query: its filter cannot be
+    pushed into the scoring and repeat it."""
+    funnel, stages = map_stages(tmp_path, monkeypatch, "lang_pred",
+                                lambda: _run(docs, tmp_path)[0])
+    assert funnel == WARC_FUNNEL
+    assert len(stages) == 1 and None not in stages.values(), stages
+
+
 def test_curation_dedup_lines_footer_funnel(footer_docs, tmp_path,
                                             monkeypatch):
     """The line scrub on a corpus with repeated footers: every footer

@@ -98,6 +98,16 @@ def test_lsh_pairs_plan_is_one_aggregation(spark, sigs):
     assert plan.count("Exchange") <= 2, plan
 
 
+def test_minhash_plan_splits_text_once(spark):
+    """The shingles read one words array: each of its uses in the
+    shingle lambda would otherwise split the whole text again."""
+    docs = spark.createDataFrame([("a", "one two three four")],
+                                 "doc_key string, text string")
+    sigs = dedup.minhash_signatures(docs, key_col="doc_key")
+    plan = sigs._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan
+
+
 def _union_find_drops(pairs) -> int:
     """Docs dropped by one-canonical-per-component: every node in a
     pair minus one survivor per connected component."""
